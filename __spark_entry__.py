@@ -1161,13 +1161,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["img_flow_direction"] = img_flow_direction
 
     def img_flow_accum(spark, sf_dir):
-        """D8 flow accumulation (hydro.flow_accumulation): iterative
-        inflow-sum fixpoint over the flow forest, the PageRank shape --
-        one equi-join + one map-side-combined sum per round over three
-        narrow columns, localCheckpoint per round, convergence-detected.
-        The oracle counts each cell's transitive upstream set with a
-        recursive CTE over the SAME SQL-recomputed flow forest, so the
-        iterative engine loop is checked against a closed-form closure."""
+        """D8 flow accumulation (hydro.flow_accumulation): pointer
+        doubling over the flow forest -- one union + sum groupBy and one
+        pointer self-join per round, O(log depth) rounds on the shared
+        fixpoint driver, convergence-detected.  The oracle counts each
+        cell's transitive upstream set with a recursive CTE over the SAME
+        SQL-recomputed flow forest, so the iterative engine loop is
+        checked against a closed-form closure."""
         from terraspark import hydro
         st = _fixture_state(spark)
         return _hydro_state(spark)["acc"]

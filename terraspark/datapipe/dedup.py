@@ -205,9 +205,10 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     Near-duplication is not transitive, so pairs are resolved into
     connected components: reuses the distributed min-label + pointer-
     jumping CC from :func:`terraspark.vectorize.connected_components`
-    (O(log n) rounds, localCheckpoint per round, label table is two
-    int64 columns per clustered doc -- document text never enters the
-    loop).  Returns one row per doc appearing in >=1 pair:
+    (O(log n) rounds, localCheckpoint per round, RuntimeError when
+    ``max_iter`` rounds do not converge; the label table is two int64
+    columns per clustered doc -- document text never enters the loop).
+    Returns one row per doc appearing in >=1 pair:
 
         (doc_id, cluster, n_members, keep)
 

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from .cells import _LON_BITS
 from .config import TILE
+from .fixpoint import fixpoint
 
 #              dir  dlat dlon dist
 D8 = [(0, 0, 1, 1.0),
@@ -113,56 +114,60 @@ def flow_accumulation(flow: DataFrame, max_iter: int = 512) -> DataFrame:
     (including itself) whose drainage path passes through each cell; the
     operator behind stream extraction and drainage-area thresholds.
 
-    flow: (dem_id, cell, flow_dir, ...) from :func:`flow_direction`;
-    the flow graph is a functional forest (each cell drains to at most
-    one neighbor), so accumulation is the fixpoint of
+    flow: (dem_id, cell, flow_dir, ...) from :func:`flow_direction`; the
+    flow graph is a functional forest (each cell drains to at most one
+    neighbor).  Pointer doubling, as in :func:`watershed`: after k rounds
+    every cell carries p, its 2^k-th downstream cell (null past the end
+    of its path), and acc, the number of cells fewer than 2^k steps
+    upstream of it (itself included).  A round applies
 
-        acc[c] = 1 + sum(acc[u] for u draining into c)
+        acc'(c) = acc(c) + sum(acc(w) for w with p(w) = c)
+        p'(w)   = p(p(w))
 
-    reached after depth(longest flow path) rounds.  Each round is one
-    equi-join + one map-side-combinable sum over a (dem_id, cell, acc)
-    table of three narrow columns -- the PageRank shape, localCheckpoint
-    per round to keep lineage flat; convergence is detected by an
-    acc-table equality count, so max_iter is a backstop, not a tuning
-    knob.  At 100 TB the round count is bounded by terrain path length
-    (hundreds), not data size; a pointer-doubling variant trades
-    O(depth) rounds for O(log depth) at 2x traffic per round if that
-    ever dominates."""
+    so a forest whose longest path has D steps resolves in
+    ceil(log2(D + 1)) rounds, and ``max_iter`` bounds those doubling
+    rounds, not the path length.  Counts are integers, so the result is
+    exact.  Each round is one union + sum groupBy and one pointer
+    self-join over a four-column table, driven by
+    :func:`~terraspark.fixpoint.fixpoint` until no pointer is left."""
+    state = _downstream(flow, F.lit(1).cast("long").alias("acc"))
+
+    def double(cur: DataFrame) -> DataFrame:
+        up = cur.where(F.col("p").isNotNull()).select(
+            "dem_id", F.col("p").alias("cell"), "acc")
+        new = (cur.unionByName(up, allowMissingColumns=True)
+               .groupBy("dem_id", "cell")
+               .agg(F.max("p").alias("p"), F.sum("acc").alias("acc")))
+        return _jump(new, cur)
+
+    return fixpoint(state, double, F.col("p").isNotNull(), max_iter,
+                    "flow_accumulation").select("dem_id", "cell", "acc")
+
+
+def _downstream(flow: DataFrame, *cols) -> DataFrame:
+    """(dem_id, cell, p, *cols): the start state of the pointer-doubling
+    loops -- p is each cell's D8 target, null at pits and where the
+    target is not a cell of ``flow``."""
     step = 1 << _LON_BITS
-    edges = (flow.where(F.col("flow_dir") >= 0)
-             .select("dem_id", F.col("cell").alias("src"),
-                     _flow_target(step).alias("dst"))
-             .localCheckpoint())
-    base = flow.select("dem_id", "cell").localCheckpoint()
-    acc = base.withColumn("acc", F.lit(1).cast("long"))
-    changed = -1
-    for _ in range(max_iter):
-        inflow = (edges.join(
-            acc.select("dem_id", F.col("cell").alias("src"),
-                       F.col("acc").alias("up")), ["dem_id", "src"])
-            .groupBy("dem_id", F.col("dst").alias("cell"))
-            .agg(F.sum("up").alias("inn")))
-        new = (base.join(inflow, ["dem_id", "cell"], "left")
-               .select("dem_id", "cell",
-                       (F.lit(1) + F.coalesce("inn", F.lit(0)))
-                       .cast("long").alias("acc"))
-               .localCheckpoint())
-        changed = (new.join(acc.withColumnRenamed("acc", "old"),
-                            ["dem_id", "cell"])
-                   .where(F.col("acc") != F.col("old")).count())
-        acc = new
-        if changed == 0:
-            break
-    if changed != 0:
-        # An unconverged fixpoint is WRONG accumulation (paths longer
-        # than max_iter are silently truncated), and real terrain path
-        # lengths run to hundreds -- fail loudly instead of returning it.
-        raise RuntimeError(
-            f"flow_accumulation did not converge in {max_iter} rounds "
-            f"({changed} cells still changing); the longest flow path "
-            f"exceeds max_iter -- raise max_iter (rounds are bounded by "
-            f"terrain path length, not data size)")
-    return acc
+    cells = flow.select("dem_id", F.col("cell").alias("p"),
+                        F.lit(True).alias("_in"))
+    return (flow.withColumn("p", F.when(F.col("flow_dir") >= 0,
+                                        _flow_target(step)))
+            .join(cells, ["dem_id", "p"], "left")
+            .select("dem_id", "cell",
+                    F.when(F.col("_in"), F.col("p")).alias("p"), *cols)
+            .localCheckpoint(eager=False))
+
+
+def _jump(new: DataFrame, cur: DataFrame, *at_p: str) -> DataFrame:
+    """``new`` joined to ``cur``'s row of its pointer target: p becomes
+    p(p), null past the end of the path, and each column c named in
+    ``at_p`` arrives as ``c_at_p``, its value at the old p."""
+    hop = cur.select("dem_id", F.col("cell").alias("p"),
+                     F.col("p").alias("_pp"),
+                     *[F.col(c).alias(f"{c}_at_p") for c in at_p])
+    return (new.join(hop, ["dem_id", "p"], "left")
+            .drop("p").withColumnRenamed("_pp", "p"))
 
 
 def _flow_target(step: int):
@@ -182,33 +187,27 @@ def watershed(flow: DataFrame, max_iter: int = 40) -> DataFrame:
     depth-D paths resolve in O(log D) rounds (vs O(D) for the naive
     walk) -- the same trick vectorize.connected_components uses, here in
     its pure form because the graph is functional.  Each round is one
-    self-equi-join of a three-column int64 table, localCheckpoint to
-    keep lineage flat, convergence-detected.  Basin sizes are one
-    map-side-combinable count joined back broadcast (basins are few)."""
+    self-equi-join of a three-column int64 table that carries the
+    previous parent as ``old``, driven by
+    :func:`~terraspark.fixpoint.fixpoint`; doubling resolves depth
+    2^max_iter, so non-convergence means a cyclic flow input.  Basin
+    sizes are one map-side-combinable count joined back broadcast
+    (basins are few)."""
     step = 1 << _LON_BITS
-    cur = flow.select(
+    state = flow.select(
         "dem_id", "cell",
         F.when(F.col("flow_dir") >= 0, _flow_target(step))
-        .otherwise(F.col("cell")).alias("p")).localCheckpoint()
-    changed = -1
-    for _ in range(max_iter):
+        .otherwise(F.col("cell")).alias("p")).localCheckpoint(eager=False)
+
+    def double(cur: DataFrame) -> DataFrame:
         hop = cur.select("dem_id", F.col("cell").alias("p"),
                          F.col("p").alias("gp"))
-        nxt = (cur.join(hop, ["dem_id", "p"])
-               .select("dem_id", "cell", F.col("gp").alias("p"))
-               .localCheckpoint())
-        changed = (nxt.join(cur.withColumnRenamed("p", "old"),
-                            ["dem_id", "cell"])
-                   .where(F.col("p") != F.col("old")).count())
-        cur = nxt
-        if changed == 0:
-            break
-    if changed != 0:
-        # doubling resolves depth 2^max_iter, so this only fires on a
-        # cyclic (non-forest) flow input -- which would mean wrong basins
-        raise RuntimeError(
-            f"watershed did not converge in {max_iter} doubling rounds "
-            f"({changed} cells still changing); flow graph may be cyclic")
+        return (cur.select("dem_id", "cell", "p").join(hop, ["dem_id", "p"])
+                .select("dem_id", "cell", F.col("gp").alias("p"),
+                        F.col("p").alias("old")))
+
+    cur = fixpoint(state, double, F.col("p") != F.col("old"), max_iter,
+                   "watershed")
     sizes = cur.groupBy("dem_id", F.col("p").alias("basin")) \
         .agg(F.count("*").cast("long").alias("basin_size"))
     return (cur.select("dem_id", "cell", F.col("p").alias("basin"))
@@ -341,14 +340,16 @@ def strahler(flow: DataFrame, acc: DataFrame, threshold: int = 5,
     starting from all-1: the update is monotone and inputs only grow,
     so it converges to the Strahler order in <= depth(longest stream
     path) rounds.  Each round is one equi-join + two map-side-combinable
-    groupBys over a three-column int64 table (the flow_accumulation
-    shape; max-count extracted via groupBy (dst, ord) counts -> max
-    struct, no window function), localCheckpoint per round, loud
-    failure on non-convergence.  Round count is bounded by stream path
-    length (a terrain property), not data size."""
+    groupBys over a three-column int64 table (max-count extracted via
+    groupBy (dst, ord) counts -> max struct, no window function; the
+    cell's own row carries the previous order into the second groupBy),
+    driven by :func:`~terraspark.fixpoint.fixpoint`.  Round count is
+    bounded by stream path length (a terrain property), not data
+    size."""
     step = 1 << _LON_BITS
     stream = (acc.where(F.col("acc") >= threshold)
-              .select("dem_id", "cell", "acc").localCheckpoint())
+              .select("dem_id", "cell", "acc")
+              .localCheckpoint(eager=False))
     scells = stream.select("dem_id", "cell")
     edges = (flow.join(scells, ["dem_id", "cell"])
              .where(F.col("flow_dir") >= 0)
@@ -356,10 +357,9 @@ def strahler(flow: DataFrame, acc: DataFrame, threshold: int = 5,
                      _flow_target(step).alias("dst"))
              .join(scells.select("dem_id", F.col("cell").alias("dst")),
                    ["dem_id", "dst"])
-             .localCheckpoint())
-    cur = scells.withColumn("ord", F.lit(1).cast("int"))
-    changed = -1
-    for _ in range(max_iter):
+             .localCheckpoint(eager=False))
+
+    def relax(cur: DataFrame) -> DataFrame:
         up = edges.join(
             cur.select("dem_id", F.col("cell").alias("src"),
                        F.col("ord").alias("uo")), ["dem_id", "src"])
@@ -368,26 +368,20 @@ def strahler(flow: DataFrame, acc: DataFrame, threshold: int = 5,
         # order together with its multiplicity -- no window needed.
         per_ord = (up.groupBy("dem_id", F.col("dst").alias("cell"), "uo")
                    .agg(F.count("*").cast("int").alias("cm")))
-        top = (per_ord.groupBy("dem_id", "cell")
-               .agg(F.max(F.struct("uo", "cm")).alias("t"))
-               .select("dem_id", "cell", F.col("t.uo").alias("mo"),
-                       F.col("t.cm").alias("cm")))
-        new = (scells.join(top, ["dem_id", "cell"], "left")
-               .select("dem_id", "cell",
-                       F.when(F.col("mo").isNull(), F.lit(1))
-                       .when(F.col("cm") >= 2, F.col("mo") + 1)
-                       .otherwise(F.col("mo")).cast("int").alias("ord"))
-               .localCheckpoint())
-        changed = (new.join(cur.withColumnRenamed("ord", "old"),
-                            ["dem_id", "cell"])
-                   .where(F.col("ord") != F.col("old")).count())
-        cur = new
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"strahler did not converge in {max_iter} rounds "
-            f"({changed} cells still changing); raise max_iter")
+        top = (cur.select("dem_id", "cell", F.col("ord").alias("old"))
+               .unionByName(per_ord, allowMissingColumns=True)
+               .groupBy("dem_id", "cell")
+               .agg(F.max(F.when(F.col("uo").isNotNull(),
+                                 F.struct("uo", "cm"))).alias("t"),
+                    F.max("old").alias("old")))
+        return top.select(
+            "dem_id", "cell",
+            F.when(F.col("t").isNull(), F.lit(1))
+            .when(F.col("t.cm") >= 2, F.col("t.uo") + 1)
+            .otherwise(F.col("t.uo")).cast("int").alias("ord"), "old")
+
+    cur = fixpoint(scells.withColumn("ord", F.lit(1).cast("int")), relax,
+                   F.col("ord") != F.col("old"), max_iter, "strahler")
     return (stream.join(cur, ["dem_id", "cell"])
             .select("dem_id", "cell", "acc",
                     F.col("ord").alias("strahler")))
@@ -399,49 +393,44 @@ def flow_length(flow: DataFrame, max_iter: int = 512) -> DataFrame:
     distance (unit grid spacing, sqrt(2) diagonals) along the longest
     drainage path that terminates at each cell; headwater cells get 0.
 
-    Distributed shape: max-plus relaxation over the D8 flow edges --
-    per round one equi-join + one map-side-combinable MAX per
-    destination, localCheckpoint per round, loud failure on
-    non-convergence (the flow_accumulation contract).  Values only
-    grow, so the fixpoint lands in depth(longest path) rounds.
+    Pointer doubling, the :func:`flow_accumulation` loop with max-plus
+    in place of the sum: every cell carries p, its 2^k-th downstream
+    cell (null past the end of its path), d, the path length from the
+    cell to p, and flen, the longest path into the cell from fewer than
+    2^k steps upstream.  A round applies
 
-    Determinism: every candidate length is the left-fold of the
-    identical f64 distance sequence along its unique upstream path
-    (the flow graph is functional), and MAX over exact f64s is
-    order-free, so engine and the recursive-CTE oracle agree
-    bit-for-bit before the 6-dp round."""
-    step = 1 << _LON_BITS
+        flen'(c) = max(flen(c), max(flen(w) + d(w) for w with p(w) = c))
+        d'(w)    = d(w) + d(p(w))
+        p'(w)    = p(p(w))
+
+    so ``max_iter`` bounds ceil(log2(D + 1)) doubling rounds for a
+    longest path of D steps, not D itself.
+
+    Determinism: a candidate length is a sum of the same f64 step
+    lengths as the recursive-CTE oracle's left fold along the path, in a
+    tree-shaped association instead, so the two agree to ~1e-15 relative
+    before the 6-dp round and exactly after it; MAX over f64s is
+    order-free."""
     dist = F.lit(None).cast("double")
     for d, _, _, dl in reversed(D8):
         dist = F.when(F.col("flow_dir") == d,
                       F.expr(f"CAST('{dl!r}' AS DOUBLE)")).otherwise(dist)
-    edges = (flow.where(F.col("flow_dir") >= 0)
-             .select("dem_id", F.col("cell").alias("src"),
-                     _flow_target(step).alias("dst"), dist.alias("d"))
-             .localCheckpoint())
-    base = flow.select("dem_id", "cell").localCheckpoint()
-    cur = base.withColumn("flen", F.lit(0.0))
-    changed = -1
-    for _ in range(max_iter):
-        relax = (edges.join(
-            cur.select("dem_id", F.col("cell").alias("src"),
-                       F.col("flen").alias("ul")), ["dem_id", "src"])
-            .groupBy("dem_id", F.col("dst").alias("cell"))
-            .agg(F.max(F.col("ul") + F.col("d")).alias("via")))
-        new = (base.join(relax, ["dem_id", "cell"], "left")
-               .select("dem_id", "cell",
-                       F.coalesce("via", F.lit(0.0)).alias("flen"))
-               .localCheckpoint())
-        changed = (new.join(cur.withColumnRenamed("flen", "old"),
-                            ["dem_id", "cell"])
-                   .where(F.col("flen") != F.col("old")).count())
-        cur = new
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"flow_length did not converge in {max_iter} rounds "
-            f"({changed} cells still changing); raise max_iter")
+    state = _downstream(flow, dist.alias("d"), F.lit(0.0).alias("flen"))
+
+    def double(cur: DataFrame) -> DataFrame:
+        up = cur.where(F.col("p").isNotNull()).select(
+            "dem_id", F.col("p").alias("cell"),
+            (F.col("flen") + F.col("d")).alias("flen"))
+        new = (cur.unionByName(up, allowMissingColumns=True)
+               .groupBy("dem_id", "cell")
+               .agg(F.max("p").alias("p"), F.max("d").alias("d"),
+                    F.max("flen").alias("flen")))
+        return _jump(new, cur, "d").select(
+            "dem_id", "cell", "p", (F.col("d") + F.col("d_at_p")).alias("d"),
+            "flen")
+
+    cur = fixpoint(state, double, F.col("p").isNotNull(), max_iter,
+                   "flow_length")
     return cur.select("dem_id", "cell", F.round("flen", 6).alias("flen"))
 
 
@@ -455,9 +444,9 @@ def cost_distance(elev: DataFrame, seeds: DataFrame,
 
     Distributed shape: Bellman-Ford relaxation over the materialized
     weighted edge list -- per round one equi-join (edges x current
-    costs) + one map-side-combinable MIN per destination + a LEAST with
-    the previous round, localCheckpoint per round, convergence-detected
-    with the flow_accumulation loud-failure contract.  Round count is
+    costs) + one map-side-combinable MIN per destination over the
+    candidates and the cell's own previous cost (tagged ``old``),
+    driven by :func:`~terraspark.fixpoint.fixpoint`.  Round count is
     bounded by the longest optimal path's hop count (grid diameter),
     not data size; edges are 8 x cells narrow int64/f64 rows built
     map-side (no shuffle to construct).
@@ -484,7 +473,7 @@ def cost_distance(elev: DataFrame, seeds: DataFrame,
              .select("dem_id", F.col("cell").alias("src"), "dst",
                      ((F.col("elev") + F.col("delev")) * F.lit(0.5)
                       * F.col("s.len")).alias("w"))
-             .localCheckpoint())
+             .localCheckpoint(eager=False))
     inf = float("inf")
     d = (elev.select("dem_id", "cell")
          .join(seeds.select("dem_id", "cell")
@@ -492,29 +481,22 @@ def cost_distance(elev: DataFrame, seeds: DataFrame,
          .select("dem_id", "cell",
                  F.when(F.col("_s"), F.lit(0.0)).otherwise(F.lit(inf))
                  .alias("cost"))
-         .localCheckpoint())
-    changed = -1
-    for _ in range(max_iter):
-        relax = (edges.join(
-            d.select("dem_id", F.col("cell").alias("src"),
-                     F.col("cost").alias("sc")), ["dem_id", "src"])
-            .groupBy("dem_id", F.col("dst").alias("cell"))
-            .agg(F.min(F.col("sc") + F.col("w")).alias("via")))
-        new = (d.join(relax, ["dem_id", "cell"], "left")
-               .select("dem_id", "cell",
-                       F.least("cost", F.coalesce("via", F.lit(inf)))
-                       .alias("cost"))
-               .localCheckpoint())
-        changed = (new.join(d.withColumnRenamed("cost", "old"),
-                            ["dem_id", "cell"])
-                   .where(F.col("cost") != F.col("old")).count())
-        d = new
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"cost_distance did not converge in {max_iter} rounds "
-            f"({changed} cells still relaxing); raise max_iter")
+         .localCheckpoint(eager=False))
+
+    def relax(cur: DataFrame) -> DataFrame:
+        via = edges.join(
+            cur.select("dem_id", F.col("cell").alias("src"),
+                       F.col("cost").alias("sc")), ["dem_id", "src"]) \
+            .select("dem_id", F.col("dst").alias("cell"),
+                    (F.col("sc") + F.col("w")).alias("cost"))
+        return (cur.select("dem_id", "cell", "cost",
+                           F.col("cost").alias("old"))
+                .unionByName(via, allowMissingColumns=True)
+                .groupBy("dem_id", "cell")
+                .agg(F.min("cost").alias("cost"), F.max("old").alias("old")))
+
+    d = fixpoint(d, relax, F.col("cost") != F.col("old"), max_iter,
+                 "cost_distance")
     return d.select("dem_id", "cell", F.round("cost", 6).alias("cost"))
 
 
@@ -741,12 +723,12 @@ def fill_sinks(elev: DataFrame, max_iter: int = 64) -> DataFrame:
     arithmetic -- so engine and oracle agree bit-for-bit and the
     equality-based convergence test is exact.
 
-    Distributed shape: the :func:`flow_accumulation` loop -- one
-    8-neighbor equi-join + one map-side-combinable MIN per round over a
-    three-column table, localCheckpoint per round to keep lineage flat.
+    Distributed shape: one 8-neighbor equi-join + one MIN groupBy per
+    round, into which each cell's own row (elev, boundary flag, previous
+    level) is unioned, driven by :func:`~terraspark.fixpoint.fixpoint`.
     Round count is bounded by pit pour-path length (terrain, not data
-    size); like flow_accumulation an unconverged exit raises rather
-    than returning a wrong surface."""
+    size); an unconverged exit raises rather than returning a wrong
+    surface."""
     step = 1 << _LON_BITS
     deltas = [dla * step + dlo for _, dla, dlo, _ in D8]
     dlist = ", ".join(f"{d}L" for d in deltas)
@@ -756,48 +738,41 @@ def fill_sinks(elev: DataFrame, max_iter: int = 64) -> DataFrame:
     nbr = (elev.select("dem_id", "cell",
                        F.explode(F.expr(f"array({dlist})")).alias("d"))
            .withColumn("target", F.col("cell") + F.col("d"))
-           .localCheckpoint())
+           .localCheckpoint(eager=False))
     present = elev.select("dem_id", F.col("cell").alias("target"),
                           F.col("elev").alias("nelev"))
     deg = (nbr.join(present, ["dem_id", "target"])
            .groupBy("dem_id", "cell")
            .agg(F.count("*").alias("n_nbr")))
     top = elev.groupBy("dem_id").agg(F.max("elev").alias("wmax"))
-    base = (elev.join(deg, ["dem_id", "cell"])
-            .join(F.broadcast(top), "dem_id")
-            .select("dem_id", "cell", "elev",
-                    (F.col("n_nbr") < 8).alias("boundary"), "wmax")
-            .localCheckpoint())
-    w = base.select(
-        "dem_id", "cell",
-        F.when(F.col("boundary"), F.col("elev")).otherwise(F.col("wmax"))
-        .alias("w"))
-    changed = -1
-    for _ in range(max_iter):
-        nw = (nbr.join(w.select("dem_id",
-                                F.col("cell").alias("target"),
-                                F.col("w").alias("nw")),
-                       ["dem_id", "target"])
-              .groupBy("dem_id", "cell")
-              .agg(F.min("nw").alias("mn")))
-        new = (base.join(nw, ["dem_id", "cell"], "left")
-               .select("dem_id", "cell",
-                       F.when(F.col("boundary"), F.col("elev"))
-                       .otherwise(F.greatest(
-                           F.col("elev"),
-                           F.coalesce("mn", F.col("wmax")))).alias("w"))
-               .localCheckpoint())
-        changed = (new.join(w.withColumnRenamed("w", "old"),
-                            ["dem_id", "cell"])
-                   .where(F.col("w") != F.col("old")).count())
-        w = new
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"fill_sinks did not converge in {max_iter} rounds "
-            f"({changed} cells still changing); raise max_iter (rounds "
-            f"are bounded by pit pour-path length, not data size)")
+    # every cell kept here has an in-grid neighbor that is kept too, so
+    # each round's neighbor MIN below is never empty
+    w = (elev.join(deg, ["dem_id", "cell"])
+         .join(F.broadcast(top), "dem_id")
+         .select("dem_id", "cell", "elev",
+                 (F.col("n_nbr") < 8).alias("boundary"),
+                 F.when(F.col("n_nbr") < 8, F.col("elev"))
+                 .otherwise(F.col("wmax")).alias("w"))
+         .localCheckpoint(eager=False))
+
+    def relax(cur: DataFrame) -> DataFrame:
+        nw = nbr.join(cur.select("dem_id", F.col("cell").alias("target"),
+                                 F.col("w").alias("nw")),
+                      ["dem_id", "target"]).select("dem_id", "cell", "nw")
+        g = (cur.select("dem_id", "cell", "elev", "boundary",
+                        F.col("w").alias("old"))
+             .unionByName(nw, allowMissingColumns=True)
+             .groupBy("dem_id", "cell")
+             .agg(F.max("elev").alias("elev"),
+                  F.max("boundary").alias("boundary"),
+                  F.min("nw").alias("mn"), F.max("old").alias("old")))
+        return g.select("dem_id", "cell", "elev", "boundary",
+                        F.when(F.col("boundary"), F.col("elev"))
+                        .otherwise(F.greatest("elev", "mn")).alias("w"),
+                        "old")
+
+    w = fixpoint(w, relax, F.col("w") != F.col("old"), max_iter,
+                 "fill_sinks").select("dem_id", "cell", "w")
     # 6-dp presentation round: elev means carry batch-reduction low-bit
     # noise (~1e-13) relative to the per-row numpy model, and filled is
     # a selection among them; the relaxation itself runs on raw f64s.
@@ -991,53 +966,43 @@ def hand(elev: DataFrame, flow: DataFrame, acc: DataFrame,
     Distributed shape: an absorbing one-step relaxation -- per round,
     rows whose walk position is not yet a stream cell (and still has a
     flow edge) advance one hop carrying (position, accumulated f64
-    distance); stream positions absorb.  One edge equi-join + one
-    stream-membership left join per round over a four-column frame,
-    localCheckpoint, convergence-detected with the loud-failure
-    backstop (rounds are bounded by flow-path length, not data size).
+    distance); stream positions absorb.  One left join per round against
+    the flow edges that leave non-stream cells, over a five-column frame
+    that carries the previous position, driven by
+    :func:`~terraspark.fixpoint.fixpoint` (rounds are bounded by
+    flow-path length, not data size).
     The sequential one-hop fold keeps the f64 distance association
     identical to the oracle's recursive walk."""
     step = 1 << _LON_BITS
     sset = (acc.where(F.col("acc") >= threshold)
             .select("dem_id", F.col("cell").alias("cur"),
                     F.lit(True).alias("is_stream"))
-            .localCheckpoint())
+            .localCheckpoint(eager=False))
     dist = sum(F.when(F.col("flow_dir") == d,
                       F.expr(f"CAST('{dd!r}' AS DOUBLE)"))
                .otherwise(F.lit(0.0)) for d, _, _, dd in D8)
-    ed = (flow.where(F.col("flow_dir") >= 0)
-          .select("dem_id", F.col("cell").alias("src"),
-                  _flow_target(step).alias("dst"), dist.alias("d"))
-          .localCheckpoint())
+    # the walk advances exactly along edges out of non-stream cells
+    adv = (flow.where(F.col("flow_dir") >= 0)
+           .select("dem_id", F.col("cell").alias("cur"),
+                   _flow_target(step).alias("dst"), dist.alias("d"))
+           .join(sset, ["dem_id", "cur"], "left_anti")
+           .localCheckpoint(eager=False))
     state = elev.select("dem_id", "cell", F.col("cell").alias("cur"),
-                        F.lit(0.0).alias("dist")).localCheckpoint()
-    changed = -1
-    for _ in range(max_iter):
-        nxt = (state
-               .join(sset, ["dem_id", "cur"], "left")
-               .join(ed.select("dem_id", F.col("src").alias("cur"),
-                               "dst", "d"), ["dem_id", "cur"], "left")
-               .select("dem_id", "cell",
-                       F.when(F.col("is_stream").isNull()
-                              & F.col("dst").isNotNull(), F.col("dst"))
-                       .otherwise(F.col("cur")).alias("cur"),
-                       F.when(F.col("is_stream").isNull()
-                              & F.col("dst").isNotNull(),
-                              F.col("dist") + F.col("d"))
-                       .otherwise(F.col("dist")).alias("dist"))
-               .localCheckpoint())
-        changed = (nxt.join(state.select(
-            "dem_id", "cell", F.col("cur").alias("old")),
-            ["dem_id", "cell"])
-            .where(F.col("cur") != F.col("old")).count())
-        state = nxt
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"hand walk did not converge in {max_iter} rounds "
-            f"({changed} cells still advancing); the longest flow path "
-            f"exceeds max_iter -- raise max_iter")
+                        F.lit(0.0).alias("dist"))
+
+    def walk(cur: DataFrame) -> DataFrame:
+        moves = F.col("dst").isNotNull()
+        return (cur.select("dem_id", "cell", "cur", "dist")
+                .join(adv, ["dem_id", "cur"], "left")
+                .select("dem_id", "cell",
+                        F.when(moves, F.col("dst")).otherwise(F.col("cur"))
+                        .alias("cur"),
+                        F.when(moves, F.col("dist") + F.col("d"))
+                        .otherwise(F.col("dist")).alias("dist"),
+                        F.col("cur").alias("old")))
+
+    state = fixpoint(state, walk, F.col("cur") != F.col("old"), max_iter,
+                     "hand")
     send = elev.select("dem_id", F.col("cell").alias("cur"),
                        F.col("elev").alias("send"))
     return (elev.join(state.select("dem_id", "cell", "cur", "dist"),

@@ -10,16 +10,20 @@ Pipeline:
      math on the int64 cell key (east = ilon+1 = cell+1 within the same
      ilat lane; south = ilat+1 = cell + 2^28) -- no Python, no geometry
      library;
-  4. connected components by iterative min-label propagation WITH pointer
-     jumping (label <- min(own, neighbors' labels, label's label)): the
-     plain neighbor-min loop needs O(diameter) rounds, path-halving makes
-     it O(log n) -- the difference between 40 and 7 shuffles on a
+  4. connected components by min-label propagation WITH pointer jumping
+     (label <- min(own, neighbors' labels, label's label)): the plain
+     neighbor-min loop needs O(diameter) rounds, path-halving makes it
+     O(log n) -- the difference between 40 and 7 shuffles on a
      continent-sized region;
   5. each component -> bounding-box polygon (WKT) + cell count.
 
-Every iteration localCheckpoints the label table: iterative Spark plans
-otherwise grow lineage linearly and re-execute the whole history each
-round (the classic iterative-algorithm trap).
+The loop runs on :func:`terraspark.fixpoint.fixpoint`: one propagation
+step per round, each round one lazy checkpoint (iterative plans would
+otherwise grow lineage linearly and re-execute the whole history) plus
+one changed-label count, and a RuntimeError when ``max_iter`` rounds do
+not converge -- a half-merged component is never returned.  Loop
+parallelism is a ``repartition`` of each round's union frame, sized
+from the label count; no session conf is touched.
 
 The SQL oracle (see __spark_entry__.oracle_sql, img_polygonize) runs the
 IDENTICAL edge arithmetic and a recursive-CTE transitive closure over the
@@ -35,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import fixpoint
 
 _LON_BITS = 28
 _MASK = (1 << _LON_BITS) - 1
@@ -74,76 +80,35 @@ def connected_components(active: DataFrame, edges: DataFrame,
                          max_iter: int = 50) -> DataFrame:
     """(cell, label) with label = MIN cell key of the component.
 
-    Min-label propagation + pointer jumping; converges when an iteration
-    changes nothing.  Label tables are tiny (one row per active cell, two
-    int64 columns) -- the pixel data never enters the loop."""
+    Min-label propagation + pointer jumping, one step per
+    :func:`~terraspark.fixpoint.fixpoint` round; raises RuntimeError when
+    ``max_iter`` rounds still change labels.  Label tables are tiny (one
+    row per active cell, two int64 columns) -- the pixel data never
+    enters the loop."""
     labels = active.select("cell", F.col("cell").alias("label")) \
-        .localCheckpoint()
-    # Scale-adaptive loop partitioning: every round shuffles only the
-    # narrow (cell, label) table, whose size is known exactly once the
-    # seed table is materialized.  Sizing the loop's shuffles from that
-    # count (~500k rows per partition, never above the session default)
-    # replaces 32-task micro-stages with 1-2 tasks at fixture scale and
-    # still fans out proportionally on a continent-sized region -- the
-    # per-round scheduling overhead was the dominant cost of the loop
-    # (measured 9 rounds x ~0.4 s for a 2.6k-label table, nearly all
-    # task-launch latency).  Restored after the loop so downstream plans
-    # keep the session's sizing.
+        .localCheckpoint(eager=False)
     # the edge table is re-read every round; cut its upstream plan (e.g.
-    # polygonize's join+distinct edge derivation) once instead of
-    # re-executing it per round -- lazy, so it materializes inside the
-    # first round's job
-    if not edges.isStreaming:
-        edges = edges.localCheckpoint(eager=False)
-    spark = active.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    aqe_key = "spark.sql.adaptive.enabled"
-    session_parts = int(spark.conf.get(key))
-    session_aqe = spark.conf.get(aqe_key)
-    n_nodes = labels.count()
-    loop_parts = max(1, min(session_parts, n_nodes // 500_000 + 1))
-    spark.conf.set(key, str(loop_parts))
-    # AQE re-plans and re-submits every exchange of every round as its own
-    # query stage; with the loop's partition count already derived from
-    # the exact table size there is nothing left for it to adapt, and its
-    # per-round planning latency dominates these micro-stages
-    spark.conf.set(aqe_key, "false")
-    try:
-        labels = _cc_loop(labels, edges, max_iter)
-    finally:
-        spark.conf.set(key, str(session_parts))
-        spark.conf.set(aqe_key, session_aqe)
-    return labels
-
-
-def _cc_loop(labels: DataFrame, edges: DataFrame, max_iter: int,
-             steps_per_round: int = 2) -> DataFrame:
-    """Min-label + path-halving propagation, ``steps_per_round``
-    propagation steps per DRIVER ROUND.
-
-    At fixture scale a round's cost is dominated by the driver barrier
-    (plan + schedule + convergence count: measured ~0.17 s gap + ~0.09 s
-    job per round vs milliseconds of actual shuffle), so chaining two
-    steps into one lazy plan halves the barriers, checkpoints and counts
-    for the same total shuffle work; on a cluster the same chaining
-    halves the number of synchronization points of the loop.  Semantics
-    are unchanged: convergence is declared when the LAST step of a round
-    changes nothing (exactly the old one-step criterion -- propagation is
-    idempotent at the fixpoint, so any extra step a doubled round runs
-    past convergence is a no-op)."""
+    # polygonize's join+distinct edge derivation) once -- lazy, so it
+    # materializes inside the first round's job
+    nbrs = edges.select(F.col("src").alias("cell"), "dst") \
+        .localCheckpoint(eager=False)
+    # Loop parallelism from the exact label count (~500k rows per
+    # partition, never above the session default): 1-2 tasks at fixture
+    # scale, proportional fan-out on a continent-sized region.  It is the
+    # partitioning of the loop's own union frame, so concurrent queries
+    # keep the session's sizing.
+    parts = int(active.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = max(1, min(parts, labels.count() // 500_000 + 1))
 
     def step(cur: DataFrame) -> DataFrame:
-        nbr = (edges.withColumnRenamed("src", "cell")
-               .join(cur, "cell")
-               .select(F.col("dst").alias("cell"), "label",
-                       F.lit(False).alias("_own")))
-        # The step's input label rides through the SAME union+groupBy as
-        # a tagged side-aggregate (each cell has exactly one _own row),
-        # so convergence is read off the checkpointed blocks with a plain
-        # filter-count -- no separate labels-join (one exchange fewer per
-        # step than joining the old table back in).
+        cur = cur.select("cell", "label")
+        nbr = nbrs.join(cur, "cell").select(
+            F.col("dst").alias("cell"), "label", F.lit(False).alias("_own"))
+        # The input label rides through the SAME union+groupBy as a
+        # tagged side-aggregate (each cell has exactly one _own row), so
+        # convergence is a plain filter-count on the checkpointed round.
         merged = (cur.withColumn("_own", F.lit(True)).unionByName(nbr)
-                  .groupBy("cell")
+                  .repartition(n, "cell").groupBy("cell")
                   .agg(F.min("label").alias("label"),
                        F.min(F.when(F.col("_own"), F.col("label")))
                        .alias("old")))
@@ -155,23 +120,8 @@ def _cc_loop(labels: DataFrame, edges: DataFrame, max_iter: int,
                 .select("cell", F.least("label", "jump").alias("label"),
                         "old"))
 
-    steps_left = max_iter
-    while steps_left > 0:
-        n_steps = min(steps_per_round, steps_left)
-        steps_left -= n_steps
-        cur = labels
-        for _ in range(n_steps):
-            cur = step(cur.select("cell", "label"))
-        # lazy checkpoint: the convergence count below is the round's ONLY
-        # action -- it materializes the checkpoint blocks and reads the
-        # changed-row count in one job instead of an eager-checkpoint job
-        # followed by a count job
-        new = cur.localCheckpoint(eager=False)
-        changed = new.where(F.col("label") != F.col("old")).count()
-        labels = new.select("cell", "label")
-        if changed == 0:
-            break
-    return labels
+    return fixpoint(labels, step, F.col("label") != F.col("old"), max_iter,
+                    "connected_components").select("cell", "label")
 
 
 def polygonize(cell_means: DataFrame, threshold: float,
