@@ -1161,10 +1161,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["img_flow_direction"] = img_flow_direction
 
     def img_flow_accum(spark, sf_dir):
-        """D8 flow accumulation (hydro.flow_accumulation): pointer
-        doubling over the flow forest -- one union + sum groupBy and one
-        pointer self-join per round, O(log depth) rounds on the shared
-        fixpoint driver, convergence-detected.  The oracle counts each
+        """D8 flow accumulation (hydro.flow_accumulation): one numpy
+        topological sweep per 256x256-cell DEM block, with block-edge
+        cells copied into neighbouring blocks as a read-only halo; the
+        shared fixpoint driver repeats rounds only while values cross
+        block edges (one round for these DEMs).  The oracle counts each
         cell's transitive upstream set with a recursive CTE over the SAME
         SQL-recomputed flow forest, so the iterative engine loop is
         checked against a closed-form closure."""
@@ -1193,12 +1194,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def img_watershed(spark, sf_dir):
         """Watershed labeling (hydro.watershed): every cell labeled by
-        the pit/outlet its drainage path terminates at, via pointer
-        DOUBLING over the functional flow forest -- depth-D paths
-        resolve in O(log D) self-joins of a three-column int64 table.
-        The oracle walks each cell to its root with a recursive CTE over
-        the same SQL-recomputed forest and counts basin sizes, so the
-        log-round engine loop is checked against the closed-form walk."""
+        the pit/outlet its drainage path terminates at, by the same
+        per-block solve as flow accumulation: numpy pointer doubling to
+        the pit or halo outlet inside each block, basin size = the
+        accumulation at the pit.  The oracle walks each cell to its root
+        with a recursive CTE over the same SQL-recomputed forest and
+        counts basin sizes, so the block solve is checked against the
+        closed-form walk."""
         from terraspark import hydro
         st = _fixture_state(spark)
         return hydro.watershed(
@@ -1347,8 +1349,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Stream-network segment extraction (hydro.stream_segments,
         the r.to.vect lines analogue): maximal stream chains broken at
         junctions, labeled by the downstream end cell via the SAME
-        pointer-doubling machinery as watershed over a junction-stopped
-        flow rewrite; per-segment cell counts and internal chain
+        block-solved watershed over a junction-stopped flow rewrite;
+        per-segment cell counts and internal chain
         length.  The oracle walks the identical stop-at-junction parent
         relation recursively over the SQL-recomputed flow forest."""
         from terraspark import hydro

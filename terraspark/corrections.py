@@ -244,12 +244,9 @@ def apply_corrections(joined: DataFrame, scalars,
     # _correct_batches) -- a narrow in-partition key sort, no exchange.
     # Numerically inert: kernels are per-tile and scalars are precomputed,
     # so row order cannot change any output value (unlike the stats stage,
-    # which is deliberately left unsorted).  Env kill-switch for A/B
-    # probing only.
-    import os
-    enriched = joined.join(sc_df, ["image_id", "band"], "inner")
-    if os.environ.get("TERRASPARK_SORT_KERNELS", "1") != "0":
-        enriched = enriched.sortWithinPartitions("image_id", "band")
+    # which is deliberately left unsorted).
+    enriched = (joined.join(sc_df, ["image_id", "band"], "inner")
+                .sortWithinPartitions("image_id", "band"))
     return enriched.mapInPandas(
         lambda it: _correct_batches(it, list(methods), tile, params),
         schema=CORRECTED_SCHEMA)

@@ -24,9 +24,11 @@ log = logging.getLogger(__name__)
 
 
 def fixpoint(state: DataFrame, step: Callable[[DataFrame], DataFrame],
-             changed: Column, max_iter: int, name: str) -> DataFrame:
+             changed: Column | Callable[[DataFrame], int], max_iter: int,
+             name: str) -> DataFrame:
     """Apply ``state = step(state)`` until no row of the new state
-    satisfies ``changed``; returns that state.
+    satisfies ``changed``; returns that state.  ``changed`` may instead
+    be a function that counts those rows in the new state itself.
 
     Each round's jobs carry the description ``fixpoint:<name>:r<k>``
     (the caller's description comes back on exit; the job group is left
@@ -45,7 +47,8 @@ def fixpoint(state: DataFrame, step: Callable[[DataFrame], DataFrame],
             # lazy: the count below is the round's only action, so it
             # both materializes the checkpoint and reads the changed rows
             state = step(state).localCheckpoint(eager=False)
-            n = state.where(changed).count()
+            n = (state.where(changed).count()
+                 if isinstance(changed, Column) else changed(state))
             log.debug("fixpoint %s round %d changed %d in %.3f s",
                       name, k, n, time.perf_counter() - t0)
             if n == 0:

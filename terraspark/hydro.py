@@ -1,20 +1,26 @@
-"""D8 flow routing over the cell index: per-cell steepest-descent flow
-direction + inflow degree, the first step of every DEM hydrology stack
-(flow accumulation, watershed labeling, stream extraction).
+"""DEM hydrology over the cell index: D8 flow routing (per-cell
+steepest-descent flow direction + inflow degree) and the operators built
+on it -- flow accumulation, watershed labeling, stream extraction, sink
+filling -- plus the local terrain statistics.
 
 The reference ships DEM analytics only as slope/aspect inputs to the
 corrections (/root/reference/processing_alg/execution_context.py:200-247);
-flow routing is the natural next operator over the same cell-indexed DEM
-and exercises a different distributed shape: an 8-neighbor self-equi-join
-on cell keys generated map-side (the join form of the halo exchange used
-by the pixel kernels -- no Arrow padding needed because the unit is the
-per-cell aggregate, not the pixel block).
+flow routing is the natural next operator over the same cell-indexed DEM.
+Routing and the neighbourhood statistics are an 8-neighbor self-equi-join
+on cell keys generated map-side (the join form of the pixel kernels' halo
+exchange), hash-partitioned on (dem_id, cell): no skew, every cell has
+at most 8 candidates.
 
-Scale: the per-cell elevation table is pixels/TILE^2 rows of three narrow
-columns -- at 100 TB of rasters that is ~10^7 rows, a small shuffle; the
-neighbor join is an equi-join on (dem_id, cell) so it hash-partitions
-evenly (no skew: every cell has exactly 8 candidates), and the inflow
-count is one map-side-combinable groupBy.
+The five flow operators (flow_accumulation, watershed, flow_length,
+strahler, fill_sinks) are block-local (Barnes 2016): cells are keyed to
+_BLOCK x _BLOCK blocks from each DEM's minimum (ilat, ilon), every
+block-edge cell is copied once into each neighbouring block as a
+read-only halo ring, and one applyInPandas call per (dem_id, block)
+solves the block in numpy -- a topological sweep, or a priority-flood --
+with the halo values held fixed.  The shared fixpoint driver repeats
+that round only while values still cross block edges, so ``max_iter``
+bounds block-edge crossings, a DEM that fits one block settles in one
+round, and Python memory per group is bounded by (_BLOCK + 2)^2 rows.
 
 Direction semantics (grid-index deltas; ilat +1 = north, ilon +1 = east):
 dir 0..7 = E, NE, N, NW, W, SW, S, SE; dist = sqrt(2) on diagonals; the
@@ -26,12 +32,13 @@ row to join -- identical arithmetic on the oracle side.
 """
 from __future__ import annotations
 
+import heapq
 import math
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .cells import _LON_BITS
@@ -114,60 +121,65 @@ def flow_accumulation(flow: DataFrame, max_iter: int = 512) -> DataFrame:
     (including itself) whose drainage path passes through each cell; the
     operator behind stream extraction and drainage-area thresholds.
 
-    flow: (dem_id, cell, flow_dir, ...) from :func:`flow_direction`; the
-    flow graph is a functional forest (each cell drains to at most one
-    neighbor).  Pointer doubling, as in :func:`watershed`: after k rounds
-    every cell carries p, its 2^k-th downstream cell (null past the end
-    of its path), and acc, the number of cells fewer than 2^k steps
-    upstream of it (itself included).  A round applies
-
-        acc'(c) = acc(c) + sum(acc(w) for w with p(w) = c)
-        p'(w)   = p(p(w))
-
-    so a forest whose longest path has D steps resolves in
-    ceil(log2(D + 1)) rounds, and ``max_iter`` bounds those doubling
-    rounds, not the path length.  Counts are integers, so the result is
-    exact.  Each round is one union + sum groupBy and one pointer
-    self-join over a four-column table, driven by
-    :func:`~terraspark.fixpoint.fixpoint` until no pointer is left."""
-    state = _downstream(flow, F.lit(1).cast("long").alias("acc"))
-
-    def double(cur: DataFrame) -> DataFrame:
-        up = cur.where(F.col("p").isNotNull()).select(
-            "dem_id", F.col("p").alias("cell"), "acc")
-        new = (cur.unionByName(up, allowMissingColumns=True)
-               .groupBy("dem_id", "cell")
-               .agg(F.max("p").alias("p"), F.sum("acc").alias("acc")))
-        return _jump(new, cur)
-
-    return fixpoint(state, double, F.col("p").isNotNull(), max_iter,
-                    "flow_accumulation").select("dem_id", "cell", "acc")
+    flow: (dem_id, cell, flow_dir, ...) from :func:`flow_direction`, a
+    functional forest; a path whose next cell is not a row of ``flow``
+    ends there, as at a pit.  Each block is one topological sweep,
+    acc = 1 + the sum of the inflows' acc -- exact integers."""
+    state = _blocks(flow.select("dem_id", "cell", "flow_dir")).select(
+        "*", F.lit(1).cast("long").alias("acc"), F.lit(False).alias("ok"))
+    return _block_fixpoint(state, _acc_kernel, max_iter,
+                           "flow_accumulation").select("dem_id", "cell", "acc")
 
 
-def _downstream(flow: DataFrame, *cols) -> DataFrame:
-    """(dem_id, cell, p, *cols): the start state of the pointer-doubling
-    loops -- p is each cell's D8 target, null at pits and where the
-    target is not a cell of ``flow``."""
-    step = 1 << _LON_BITS
-    cells = flow.select("dem_id", F.col("cell").alias("p"),
-                        F.lit(True).alias("_in"))
-    return (flow.withColumn("p", F.when(F.col("flow_dir") >= 0,
-                                        _flow_target(step)))
-            .join(cells, ["dem_id", "p"], "left")
-            .select("dem_id", "cell",
-                    F.when(F.col("_in"), F.col("p")).alias("p"), *cols)
-            .localCheckpoint(eager=False))
+def _acc_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
+    acc = _halo(pdf, own, "acc", 1)
+
+    def visit(src, dst):
+        np.add.at(acc, dst, acc[src])
+    pdf["ok"] = _sweep(pdf, own, visit)
+    pdf["acc"] = acc
+    return own
 
 
-def _jump(new: DataFrame, cur: DataFrame, *at_p: str) -> DataFrame:
-    """``new`` joined to ``cur``'s row of its pointer target: p becomes
-    p(p), null past the end of the path, and each column c named in
-    ``at_p`` arrives as ``c_at_p``, its value at the old p."""
-    hop = cur.select("dem_id", F.col("cell").alias("p"),
-                     F.col("p").alias("_pp"),
-                     *[F.col(c).alias(f"{c}_at_p") for c in at_p])
-    return (new.join(hop, ["dem_id", "p"], "left")
-            .drop("p").withColumnRenamed("_pp", "p"))
+def watershed(flow: DataFrame, max_iter: int = 40) -> DataFrame:
+    """(dem_id, cell, basin, basin_size): watershed labeling -- every
+    cell labeled by the pit/outlet cell its drainage path terminates at,
+    plus the size of that basin.  A cell whose path reaches a target
+    that is not a row of ``flow`` is dropped, with its whole upstream.
+
+    Per block, the basin size is the flow accumulation at the pit, and
+    one numpy pointer-doubling pass hands every cell the label and size
+    of the pit, or of the halo cell, its path ends at.  Sizes travel down
+    a basin and labels back up, so a basin spanning k block edges takes
+    up to 2k + 1 rounds."""
+    one, no = F.lit(1).cast("long"), F.lit(False)
+    state = _blocks(flow.select("dem_id", "cell", "flow_dir")).select(
+        "*", one.alias("acc"), no.alias("ok"), F.col("cell").alias("basin"),
+        one.alias("basin_size"), no.alias("gone"), no.alias("done"))
+    return (_block_fixpoint(state, _basin_kernel, max_iter, "watershed",
+                            ~F.col("done"))
+            .where(~F.col("gone"))
+            .select("dem_id", "cell", "basin", "basin_size"))
+
+
+def _basin_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
+    _acc_kernel(pdf, own)
+    n, t = len(pdf), _targets(pdf)
+    fd = pdf["flow_dir"].to_numpy(np.int64)
+    # roots: halo rows, pits, and cells whose target is not in the group
+    # -- dropped, with everything that drains to them
+    pit, gone = own & (fd < 0), _halo(pdf, own, "gone", (fd >= 0) & (t < 0))
+    root = ~own | pit | gone.astype(bool)
+    basin = _halo(pdf, own, "basin", pdf["cell"])
+    size = np.where(pit, pdf["acc"], pdf["basin_size"])
+    done = np.where(pit, pdf["ok"], _halo(pdf, own, "done", True))
+    nxt = np.where(root, np.arange(n), t)
+    for _ in range(n.bit_length()):
+        nxt = nxt[nxt]
+    # a row that still points at a non-root sits on a cycle
+    pdf["basin"], pdf["basin_size"] = basin[nxt], size[nxt]
+    pdf["gone"], pdf["done"] = gone[nxt], done[nxt] & root[nxt]
+    return own
 
 
 def _flow_target(step: int):
@@ -177,42 +189,107 @@ def _flow_target(step: int):
         .otherwise(F.lit(0)) for d, (dla, dlo) in dirs.items())
 
 
-def watershed(flow: DataFrame, max_iter: int = 40) -> DataFrame:
-    """(dem_id, cell, basin, basin_size): watershed labeling -- every
-    cell labeled by the pit/outlet cell its drainage path terminates at,
-    plus the size of that basin.
+_BLOCK = 256     # side of the flow operators' blocks, in cells
+_DELTA = np.array([dla * (1 << _LON_BITS) + dlo for _, dla, dlo, _ in D8])
 
-    Pointer DOUBLING (path halving) over the functional flow forest:
-    parent[pit] = itself, then parent <- parent[parent] each round, so
-    depth-D paths resolve in O(log D) rounds (vs O(D) for the naive
-    walk) -- the same trick vectorize.connected_components uses, here in
-    its pure form because the graph is functional.  Each round is one
-    self-equi-join of a three-column int64 table that carries the
-    previous parent as ``old``, driven by
-    :func:`~terraspark.fixpoint.fixpoint`; doubling resolves depth
-    2^max_iter, so non-convergence means a cyclic flow input.  Basin
-    sizes are one map-side-combinable count joined back broadcast
-    (basins are few)."""
-    step = 1 << _LON_BITS
-    state = flow.select(
-        "dem_id", "cell",
-        F.when(F.col("flow_dir") >= 0, _flow_target(step))
-        .otherwise(F.col("cell")).alias("p")).localCheckpoint(eager=False)
 
-    def double(cur: DataFrame) -> DataFrame:
-        hop = cur.select("dem_id", F.col("cell").alias("p"),
-                         F.col("p").alias("gp"))
-        return (cur.select("dem_id", "cell", "p").join(hop, ["dem_id", "p"])
-                .select("dem_id", "cell", F.col("gp").alias("p"),
-                        F.col("p").alias("old")))
+def _blocks(df: DataFrame, **per_dem: Column) -> DataFrame:
+    """``df`` (dem_id, cell, ...) plus ``blk``, its block's key, ``nb``,
+    the other blocks its 8-neighbourhood reaches, and each ``per_dem``
+    aggregate by name.  The DEM extent is a window over dem_id: round
+    one's only exchange, which the groupBys after it reuse."""
+    b, dem = _BLOCK, Window.partitionBy("dem_id")
+    row = F.shiftright("cell", _LON_BITS)
+    col = F.col("cell").bitwiseAND((1 << _LON_BITS) - 1)
+    lo = {"r": F.min(row).over(dem), "c": F.min(col).over(dem)}
+    x = df.select("*", (row - lo["r"]).alias("_r"),
+                  (col - lo["c"]).alias("_c"),
+                  (F.max(row).over(dem) - lo["r"]).alias("_hr"),
+                  (F.max(col).over(dem) - lo["c"]).alias("_hc"),
+                  *[agg.over(dem).alias(k) for k, agg in per_dem.items()])
 
-    cur = fixpoint(state, double, F.col("p") != F.col("old"), max_iter,
-                   "watershed")
-    sizes = cur.groupBy("dem_id", F.col("p").alias("basin")) \
-        .agg(F.count("*").cast("long").alias("basin_size"))
-    return (cur.select("dem_id", "cell", F.col("p").alias("basin"))
-            .join(F.broadcast(sizes), ["dem_id", "basin"])
-            .select("dem_id", "cell", "basin", "basin_size"))
+    def near(v, d):  # offset d along axis v leaves the cell's block
+        return ("true" if d == 0 else f"_{v} % {b} = 0 and _{v} >= {b}"
+                if d < 0 else
+                f"_{v} % {b} = {b - 1} and _{v} div {b} < _h{v} div {b}")
+
+    def key(dr, dc):
+        return f"(_r div {b} + {dr}) * (_hc div {b} + 1) + _c div {b} + {dc}"
+    nb = ", ".join(f"if({near('r', dr)} and {near('c', dc)}, "
+                   f"{key(dr, dc)}, null)" for dr in (-1, 0, 1)
+                   for dc in (-1, 0, 1) if dr or dc)
+    return x.select(*df.columns, *per_dem, F.expr(key(0, 0)).alias("blk"),
+                    F.expr(f"filter(array({nb}), k -> k is not null)")
+                    .alias("nb"))
+
+
+def _block_fixpoint(state: DataFrame, kernel, max_iter: int, name: str,
+                    changed: Column | None = None) -> DataFrame:
+    """Block rounds over ``state`` (from :func:`_blocks`) until no row
+    satisfies ``changed`` (default: not ``ok``, its value not final).
+    Each row goes to its block and, as a halo row, to the blocks in
+    ``nb``; ``kernel(pdf, own)`` solves one (dem_id, block) group in
+    place and returns the mask of rows to keep.  Changed rows are
+    counted on the JVM's row RDD: one job, where a SQL count takes two."""
+    cols, schema = state.columns, state.schema
+    changed = ~F.col("ok") if changed is None else changed
+
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.loc[kernel(pdf, pdf["_h"].to_numpy() == 0), cols]
+
+    def step(cur: DataFrame) -> DataFrame:
+        halo = F.posexplode(F.concat(F.array("blk"), "nb")).alias("_h", "_k")
+        return (cur.select("*", halo).groupBy("dem_id", "_k")
+                .applyInPandas(solve, schema))
+
+    return fixpoint(state, step,
+                    lambda cur: cur.where(changed)._jdf.rdd().count(),
+                    max_iter, name)
+
+
+def _lookup(cell: np.ndarray, key: np.ndarray) -> np.ndarray:
+    """Row of each key in ``cell`` (-1 where absent)."""
+    order = np.argsort(cell, kind="stable")
+    hit = order[np.searchsorted(cell, key, sorter=order)
+                .clip(max=len(cell) - 1)]
+    return np.where(cell[hit] == key, hit, -1)
+
+
+def _targets(pdf: pd.DataFrame) -> np.ndarray:
+    """Row of each cell's D8 target in the group: -1 at pits and where the
+    target is not in the group; a flow_dir past 7 names the cell itself,
+    as in :func:`_flow_target` -- a cycle."""
+    cell = pdf["cell"].to_numpy(np.int64)
+    fd = pdf["flow_dir"].to_numpy(np.int64)
+    t = _lookup(cell, cell + np.where(fd < 8, _DELTA[fd.clip(0, 7)], 0))
+    return np.where(fd >= 0, t, -1)
+
+
+def _halo(pdf: pd.DataFrame, own: np.ndarray, col: str, start) -> np.ndarray:
+    """``start`` at the block's own rows, the state's ``col`` at halo rows."""
+    return np.where(own, start, pdf[col].to_numpy())
+
+
+def _sweep(pdf: pd.DataFrame, own: np.ndarray, visit) -> np.ndarray:
+    """Kahn's sweep of the flow edges into the block's own rows, upstream
+    first: ``visit(src, dst)`` gets the edges out of each frontier.
+    Returns ``ok``: every inflow's value is final and the row is not on
+    a cycle (which never enters a frontier)."""
+    t = _targets(pdf)
+    tgt = np.where((t >= 0) & own[t], t, -1)
+    ok = _halo(pdf, own, "ok", True).astype(bool)
+    done = np.zeros(len(t), bool)
+    indeg = np.bincount(tgt[tgt >= 0], minlength=len(t))
+    f = np.flatnonzero(indeg == 0)
+    while f.size:
+        done[f] = True
+        src = f[tgt[f] >= 0]
+        dst = tgt[src]
+        visit(src, dst)
+        np.logical_and.at(ok, dst, ok[src])
+        np.subtract.at(indeg, dst, 1)
+        f = np.unique(dst[indeg[dst] == 0])
+    return ok & done
 
 
 def ruggedness(elev: DataFrame) -> DataFrame:
@@ -285,6 +362,24 @@ def focal_stats(elev: DataFrame, radius: int = 2) -> DataFrame:
                  .alias("frange")))
 
 
+def _rays(elev: DataFrame, max_dist: int) -> tuple[DataFrame, DataFrame]:
+    """The 8 D8 rays out to ``max_dist``: (nbr, other) where nbr holds one
+    row per cell and ray step, s = (dir, k, delta, dist) and its
+    ``target`` cell, to equi-join with other's (target, nelev)."""
+    step = 1 << _LON_BITS
+    entries = ", ".join(
+        f"named_struct('dir', {d}, 'k', {k}, "
+        f"'delta', {dla * k}L * {step}L + {dlo * k}L, "
+        f"'dist', CAST('{dist * k!r}' AS DOUBLE))"
+        for d, dla, dlo, dist in D8 for k in range(1, max_dist + 1))
+    nbr = (elev.select("dem_id", "cell", "elev",
+                       F.explode(F.expr(f"array({entries})")).alias("s"))
+           .withColumn("target", F.col("cell") + F.col("s.delta")))
+    other = elev.select("dem_id", F.col("cell").alias("target"),
+                        F.col("elev").alias("nelev"))
+    return nbr, other
+
+
 def openness(elev: DataFrame, max_dist: int = 4) -> DataFrame:
     """(dem_id, cell, n_dir, horizon_mean, horizon_max): topographic
     horizon analysis (the tangent-scale form of positive openness,
@@ -301,17 +396,7 @@ def openness(elev: DataFrame, max_dist: int = 4) -> DataFrame:
     (cell, dir) max, then per cell avg/max over <= 8 exact doubles).
     Border cells simply find fewer rows to join -- identical
     arithmetic on the oracle side."""
-    step = 1 << _LON_BITS
-    entries = ", ".join(
-        f"named_struct('dir', {d}, "
-        f"'delta', {dla * k}L * {step}L + {dlo * k}L, "
-        f"'dist', CAST('{dist * k!r}' AS DOUBLE))"
-        for d, dla, dlo, dist in D8 for k in range(1, max_dist + 1))
-    nbr = (elev.select("dem_id", "cell", "elev",
-                       F.explode(F.expr(f"array({entries})")).alias("s"))
-           .withColumn("target", F.col("cell") + F.col("s.delta")))
-    other = elev.select("dem_id", F.col("cell").alias("target"),
-                        F.col("elev").alias("nelev"))
+    nbr, other = _rays(elev, max_dist)
     j = nbr.join(other, ["dem_id", "target"])
     tan = (F.col("nelev") - F.col("elev")) / F.col("s.dist")
     per_dir = (j.groupBy("dem_id", "cell", F.col("s.dir").alias("dir"))
@@ -329,62 +414,46 @@ def strahler(flow: DataFrame, acc: DataFrame, threshold: int = 5,
     output that completes the flow_direction -> flow_accumulation ->
     watershed hydrology stack.
 
-    Stream cells are those with accumulation >= threshold; stream edges
-    are the D8 flow edges with BOTH endpoints in the stream set.  Order
-    is the least fixpoint of the synchronous relaxation
-
-        ord[c] = 1                          if c has no stream inflow
-               = m + 1  if >= 2 inflows carry the max inflow order m
-               = m      otherwise
-
-    starting from all-1: the update is monotone and inputs only grow,
-    so it converges to the Strahler order in <= depth(longest stream
-    path) rounds.  Each round is one equi-join + two map-side-combinable
-    groupBys over a three-column int64 table (max-count extracted via
-    groupBy (dst, ord) counts -> max struct, no window function; the
-    cell's own row carries the previous order into the second groupBy),
-    driven by :func:`~terraspark.fixpoint.fixpoint`.  Round count is
-    bounded by stream path length (a terrain property), not data
-    size."""
-    step = 1 << _LON_BITS
-    stream = (acc.where(F.col("acc") >= threshold)
-              .select("dem_id", "cell", "acc")
-              .localCheckpoint(eager=False))
-    scells = stream.select("dem_id", "cell")
-    edges = (flow.join(scells, ["dem_id", "cell"])
-             .where(F.col("flow_dir") >= 0)
-             .select("dem_id", F.col("cell").alias("src"),
-                     _flow_target(step).alias("dst"))
-             .join(scells.select("dem_id", F.col("cell").alias("dst")),
-                   ["dem_id", "dst"])
-             .localCheckpoint(eager=False))
-
-    def relax(cur: DataFrame) -> DataFrame:
-        up = edges.join(
-            cur.select("dem_id", F.col("cell").alias("src"),
-                       F.col("ord").alias("uo")), ["dem_id", "src"])
-        # count per (dst, order) first (<= 8 rows per dst, map-side
-        # combinable), then max(struct(order, count)) picks the top
-        # order together with its multiplicity -- no window needed.
-        per_ord = (up.groupBy("dem_id", F.col("dst").alias("cell"), "uo")
-                   .agg(F.count("*").cast("int").alias("cm")))
-        top = (cur.select("dem_id", "cell", F.col("ord").alias("old"))
-               .unionByName(per_ord, allowMissingColumns=True)
-               .groupBy("dem_id", "cell")
-               .agg(F.max(F.when(F.col("uo").isNotNull(),
-                                 F.struct("uo", "cm"))).alias("t"),
-                    F.max("old").alias("old")))
-        return top.select(
-            "dem_id", "cell",
-            F.when(F.col("t").isNull(), F.lit(1))
-            .when(F.col("t.cm") >= 2, F.col("t.uo") + 1)
-            .otherwise(F.col("t.uo")).cast("int").alias("ord"), "old")
-
-    cur = fixpoint(scells.withColumn("ord", F.lit(1).cast("int")), relax,
-                   F.col("ord") != F.col("old"), max_iter, "strahler")
-    return (stream.join(cur, ["dem_id", "cell"])
+    Stream cells have accumulation >= threshold; stream edges are the D8
+    edges between them.  Order is 1 without stream inflow, m + 1 where
+    >= 2 inflows carry the max inflow order m, else m: one topological
+    sweep over the stream edges per block."""
+    # acc and flow_dir as a union merged per cell after _blocks' exchange;
+    # a join would add two exchanges of its own
+    both = (acc.where(F.col("acc") >= threshold)
             .select("dem_id", "cell", "acc",
-                    F.col("ord").alias("strahler")))
+                    F.lit(None).cast("int").alias("flow_dir"))
+            .unionByName(flow.select("dem_id", "cell", F.lit(None)
+                                     .cast("long").alias("acc"), "flow_dir")))
+    state = (_blocks(both).groupBy("dem_id", "cell")
+             .agg(F.max("acc").alias("acc"),
+                  F.coalesce(F.max("flow_dir"), F.lit(-1)).alias("flow_dir"),
+                  F.first("blk").alias("blk"), F.first("nb").alias("nb"))
+             .where(F.col("acc").isNotNull())
+             .select("*", F.lit(1).alias("ord"), F.lit(False).alias("ok")))
+    return (_block_fixpoint(state, _strahler_kernel, max_iter, "strahler")
+            .select("dem_id", "cell", "acc", F.col("ord").alias("strahler")))
+
+
+def _strahler_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
+    order = _halo(pdf, own, "ord", 1)
+    best = np.zeros(len(pdf), np.int64)   # max inflow order so far
+    mult = np.zeros(len(pdf), np.int64)   # inflows carrying it
+
+    def settle(rows):  # rows whose inflows are all in
+        order[rows] = np.where(best[rows] == 0, 1,
+                               best[rows] + (mult[rows] >= 2))
+
+    def visit(src, dst):
+        settle(src[own[src]])
+        o, before = order[src], best[dst]
+        np.maximum.at(best, dst, o)
+        mult[dst[best[dst] > before]] = 0
+        np.add.at(mult, dst, o == best[dst])
+    pdf["ok"] = _sweep(pdf, own, visit)
+    settle(own)
+    pdf["ord"] = order
+    return own
 
 
 def flow_length(flow: DataFrame, max_iter: int = 512) -> DataFrame:
@@ -393,45 +462,26 @@ def flow_length(flow: DataFrame, max_iter: int = 512) -> DataFrame:
     distance (unit grid spacing, sqrt(2) diagonals) along the longest
     drainage path that terminates at each cell; headwater cells get 0.
 
-    Pointer doubling, the :func:`flow_accumulation` loop with max-plus
-    in place of the sum: every cell carries p, its 2^k-th downstream
-    cell (null past the end of its path), d, the path length from the
-    cell to p, and flen, the longest path into the cell from fewer than
-    2^k steps upstream.  A round applies
-
-        flen'(c) = max(flen(c), max(flen(w) + d(w) for w with p(w) = c))
-        d'(w)    = d(w) + d(p(w))
-        p'(w)    = p(p(w))
-
-    so ``max_iter`` bounds ceil(log2(D + 1)) doubling rounds for a
-    longest path of D steps, not D itself.
-
-    Determinism: a candidate length is a sum of the same f64 step
-    lengths as the recursive-CTE oracle's left fold along the path, in a
-    tree-shaped association instead, so the two agree to ~1e-15 relative
-    before the 6-dp round and exactly after it; MAX over f64s is
-    order-free."""
-    dist = F.lit(None).cast("double")
-    for d, _, _, dl in reversed(D8):
-        dist = F.when(F.col("flow_dir") == d,
-                      F.expr(f"CAST('{dl!r}' AS DOUBLE)")).otherwise(dist)
-    state = _downstream(flow, dist.alias("d"), F.lit(0.0).alias("flen"))
-
-    def double(cur: DataFrame) -> DataFrame:
-        up = cur.where(F.col("p").isNotNull()).select(
-            "dem_id", F.col("p").alias("cell"),
-            (F.col("flen") + F.col("d")).alias("flen"))
-        new = (cur.unionByName(up, allowMissingColumns=True)
-               .groupBy("dem_id", "cell")
-               .agg(F.max("p").alias("p"), F.max("d").alias("d"),
-                    F.max("flen").alias("flen")))
-        return _jump(new, cur, "d").select(
-            "dem_id", "cell", "p", (F.col("d") + F.col("d_at_p")).alias("d"),
-            "flen")
-
-    cur = fixpoint(state, double, F.col("p").isNotNull(), max_iter,
-                   "flow_length")
+    The :func:`flow_accumulation` sweep with max-plus in place of the
+    sum, flen(c) = max(flen(w) + d(w)) over the cells w draining into c:
+    each path is summed hop by hop in the recursive-CTE oracle's
+    left-fold order, and MAX over f64s is order-free, so engine and
+    oracle agree exactly before the 6-dp round."""
+    state = _blocks(flow.select("dem_id", "cell", "flow_dir")).select(
+        "*", F.lit(0.0).alias("flen"), F.lit(False).alias("ok"))
+    cur = _block_fixpoint(state, _flen_kernel, max_iter, "flow_length")
     return cur.select("dem_id", "cell", F.round("flen", 6).alias("flen"))
+
+
+def _flen_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
+    flen = _halo(pdf, own, "flen", 0.0)
+    step = np.array([d[3] for d in D8])[pdf["flow_dir"].clip(0, 7)]
+
+    def visit(src, dst):
+        np.maximum.at(flen, dst, flen[src] + step[src])
+    pdf["ok"] = _sweep(pdf, own, visit)
+    pdf["flen"] = flen
+    return own
 
 
 def cost_distance(elev: DataFrame, seeds: DataFrame,
@@ -655,17 +705,7 @@ def viewshed(elev: DataFrame, max_dist: int = 4) -> DataFrame:
     prefix-max visibility test is a closed-form CASE over the pivoted
     t_1..t_max columns (no window function, no iteration).  Pure f64
     ratio arithmetic -- no transcendental in the visibility predicate."""
-    step = 1 << _LON_BITS
-    entries = ", ".join(
-        f"named_struct('dir', {d}, 'k', {k}, "
-        f"'delta', {dla * k}L * {step}L + {dlo * k}L, "
-        f"'dist', CAST('{dist * k!r}' AS DOUBLE))"
-        for d, dla, dlo, dist in D8 for k in range(1, max_dist + 1))
-    nbr = (elev.select("dem_id", "cell", "elev",
-                       F.explode(F.expr(f"array({entries})")).alias("s"))
-           .withColumn("target", F.col("cell") + F.col("s.delta")))
-    other = elev.select("dem_id", F.col("cell").alias("target"),
-                        F.col("elev").alias("nelev"))
+    nbr, other = _rays(elev, max_dist)
     tan = (F.col("nelev") - F.col("elev")) / F.col("s.dist")
     t = {k: F.max(F.when(F.col("s.k") == k, tan))
          for k in range(1, max_dist + 1)}
@@ -701,87 +741,54 @@ def viewshed(elev: DataFrame, max_dist: int = 4) -> DataFrame:
 
 
 def fill_sinks(elev: DataFrame, max_iter: int = 64) -> DataFrame:
-    """(dem_id, cell, elev, filled, fill_depth): depression filling by
+    """(dem_id, cell, elev, filled, fill_depth): depression filling to
     the Planchon-Darboux fixpoint (the GRASS r.fill.dir / RichDEM
     epsilon=0 rule) -- the preprocessing step every production flow
     model runs BEFORE :func:`flow_direction`, so spurious pits don't
     truncate drainage.
 
-    The reference stops at slope/aspect (/root/reference/processing_alg/
-    execution_context.py:200-247); filling completes the standard
-    fill -> flow -> accumulate hydrology chain over the same cell grid.
-
-    Semantics: boundary cells (fewer than 8 in-grid neighbors) are
-    fixed at their own elevation; interior water levels start at the
-    per-DEM maximum and relax monotonically through
-
-        W(c) = max(elev(c), min over 8 neighbors of W(n))
-
-    until nothing changes.  The fixpoint is the filled surface: pits
-    rise to their pour-point elevation, everything else returns to
-    elev.  Values are pure min/max selections of input doubles -- no
-    arithmetic -- so engine and oracle agree bit-for-bit and the
-    equality-based convergence test is exact.
-
-    Distributed shape: one 8-neighbor equi-join + one MIN groupBy per
-    round, into which each cell's own row (elev, boundary flag, previous
-    level) is unioned, driven by :func:`~terraspark.fixpoint.fixpoint`.
-    Round count is bounded by pit pour-path length (terrain, not data
-    size); an unconverged exit raises rather than returning a wrong
-    surface."""
-    step = 1 << _LON_BITS
-    deltas = [dla * step + dlo for _, dla, dlo, _ in D8]
-    dlist = ", ".join(f"{d}L" for d in deltas)
-    # checkpointed once: every relaxation round re-joins this fan-out,
-    # and without the checkpoint each round would re-derive it from
-    # elev's full upstream plan (the flow_accumulation edges convention)
-    nbr = (elev.select("dem_id", "cell",
-                       F.explode(F.expr(f"array({dlist})")).alias("d"))
-           .withColumn("target", F.col("cell") + F.col("d"))
-           .localCheckpoint(eager=False))
-    present = elev.select("dem_id", F.col("cell").alias("target"),
-                          F.col("elev").alias("nelev"))
-    deg = (nbr.join(present, ["dem_id", "target"])
-           .groupBy("dem_id", "cell")
-           .agg(F.count("*").alias("n_nbr")))
-    top = elev.groupBy("dem_id").agg(F.max("elev").alias("wmax"))
-    # every cell kept here has an in-grid neighbor that is kept too, so
-    # each round's neighbor MIN below is never empty
-    w = (elev.join(deg, ["dem_id", "cell"])
-         .join(F.broadcast(top), "dem_id")
-         .select("dem_id", "cell", "elev",
-                 (F.col("n_nbr") < 8).alias("boundary"),
-                 F.when(F.col("n_nbr") < 8, F.col("elev"))
-                 .otherwise(F.col("wmax")).alias("w"))
-         .localCheckpoint(eager=False))
-
-    def relax(cur: DataFrame) -> DataFrame:
-        nw = nbr.join(cur.select("dem_id", F.col("cell").alias("target"),
-                                 F.col("w").alias("nw")),
-                      ["dem_id", "target"]).select("dem_id", "cell", "nw")
-        g = (cur.select("dem_id", "cell", "elev", "boundary",
-                        F.col("w").alias("old"))
-             .unionByName(nw, allowMissingColumns=True)
-             .groupBy("dem_id", "cell")
-             .agg(F.max("elev").alias("elev"),
-                  F.max("boundary").alias("boundary"),
-                  F.min("nw").alias("mn"), F.max("old").alias("old")))
-        return g.select("dem_id", "cell", "elev", "boundary",
-                        F.when(F.col("boundary"), F.col("elev"))
-                        .otherwise(F.greatest("elev", "mn")).alias("w"),
-                        "old")
-
-    w = fixpoint(w, relax, F.col("w") != F.col("old"), max_iter,
-                 "fill_sinks").select("dem_id", "cell", "w")
+    Semantics: boundary cells (fewer than 8 in-grid neighbors) stay at
+    their elevation, cells without one are dropped; interior levels
+    start at the per-DEM maximum and fall to the fixpoint of W(c) =
+    max(elev(c), min over 8 neighbors of W(n)).  Values are min/max
+    selections of input doubles, so engine and oracle agree bit-for-bit.
+    Each block is one priority-flood (Barnes, Lehman & Mulla 2014)
+    seeded by its boundary cells at elev and halo cells at their current
+    W; a round counts the block-edge cells whose W moved."""
+    state = _blocks(elev.select("dem_id", "cell", "elev"),
+                    wmax=F.max("elev")).select(
+        "*", F.col("wmax").alias("w"), F.col("wmax").alias("old"))
+    w = _block_fixpoint(state, _fill_kernel, max_iter, "fill_sinks",
+                        (F.size("nb") > 0) & (F.col("w") != F.col("old")))
     # 6-dp presentation round: elev means carry batch-reduction low-bit
     # noise (~1e-13) relative to the per-row numpy model, and filled is
-    # a selection among them; the relaxation itself runs on raw f64s.
-    return (elev.join(w, ["dem_id", "cell"])
-            .select("dem_id", "cell",
-                    F.round("elev", 6).alias("elev"),
+    # a selection among them; the flood itself runs on raw f64s.
+    return w.select("dem_id", "cell", F.round("elev", 6).alias("elev"),
                     F.round("w", 6).alias("filled"),
                     F.round(F.col("w") - F.col("elev"), 6)
-                    .alias("fill_depth")))
+                    .alias("fill_depth"))
+
+
+def _fill_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
+    cell = pdf["cell"].to_numpy(np.int64)
+    nbr = np.stack([_lookup(cell, cell + d) for d in _DELTA], axis=1)
+    deg = (nbr >= 0).sum(axis=1)
+    free = own & (deg == 8)
+    pdf["old"] = pdf["w"]
+    w = np.where(free, pdf["wmax"], _halo(pdf, own, "w", pdf["elev"]))
+    w, seen, elev = w.tolist(), (~free).tolist(), pdf["elev"].tolist()
+    heap = [(w[i], i) for i in np.flatnonzero(~free).tolist()]
+    heapq.heapify(heap)
+    nbr = nbr.tolist()
+    while heap:
+        wc, c = heapq.heappop(heap)
+        for n in nbr[c]:
+            if n >= 0 and not seen[n]:
+                seen[n] = True
+                w[n] = max(elev[n], wc)
+                heapq.heappush(heap, (w[n], n))
+    pdf["w"] = w
+    return own & (deg > 0)
 
 
 def hypsometry(elev: DataFrame, bins: int = 10) -> DataFrame:
@@ -831,17 +838,7 @@ def sky_view_factor(elev: DataFrame, max_dist: int = 4) -> DataFrame:
     6-dp.  Consumes the :func:`openness` join shape unchanged -- one
     delta-key fan-out, one equi-join, two map-side-combinable
     groupBys."""
-    step = 1 << _LON_BITS
-    entries = ", ".join(
-        f"named_struct('dir', {d}, "
-        f"'delta', {dla * k}L * {step}L + {dlo * k}L, "
-        f"'dist', CAST('{dist * k!r}' AS DOUBLE))"
-        for d, dla, dlo, dist in D8 for k in range(1, max_dist + 1))
-    nbr = (elev.select("dem_id", "cell", "elev",
-                       F.explode(F.expr(f"array({entries})")).alias("s"))
-           .withColumn("target", F.col("cell") + F.col("s.delta")))
-    other = elev.select("dem_id", F.col("cell").alias("target"),
-                        F.col("elev").alias("nelev"))
+    nbr, other = _rays(elev, max_dist)
     j = nbr.join(other, ["dem_id", "target"])
     tan = (F.col("nelev") - F.col("elev")) / F.col("s.dist")
     per_dir = (j.groupBy("dem_id", "cell", F.col("s.dir").alias("dir"))
@@ -867,17 +864,7 @@ def solar_access(elev: DataFrame, sun_tan: float = 0.25,
     transcendental.  Reuses the :func:`openness` join shape: one
     delta-key fan-out, one equi-join, two map-side-combinable
     groupBys."""
-    step = 1 << _LON_BITS
-    entries = ", ".join(
-        f"named_struct('dir', {d}, "
-        f"'delta', {dla * k}L * {step}L + {dlo * k}L, "
-        f"'dist', CAST('{dist * k!r}' AS DOUBLE))"
-        for d, dla, dlo, dist in D8 for k in range(1, max_dist + 1))
-    nbr = (elev.select("dem_id", "cell", "elev",
-                       F.explode(F.expr(f"array({entries})")).alias("s"))
-           .withColumn("target", F.col("cell") + F.col("s.delta")))
-    other = elev.select("dem_id", F.col("cell").alias("target"),
-                        F.col("elev").alias("nelev"))
+    nbr, other = _rays(elev, max_dist)
     tan = (F.col("nelev") - F.col("elev")) / F.col("s.dist")
     per_dir = (nbr.join(other, ["dem_id", "target"])
                .groupBy("dem_id", "cell", F.col("s.dir").alias("dir"))
@@ -903,9 +890,8 @@ def stream_segments(flow: DataFrame, acc: DataFrame,
 
     Distributed shape: the flow frame is rewritten so chains STOP at
     junction boundaries (flow_dir := -1 where the downstream stream
-    cell has stream-inflow != 1), then :func:`watershed`'s pointer
-    doubling labels every cell with its segment end in O(log depth)
-    rounds -- no new machinery; segment length is one
+    cell has stream-inflow != 1), then :func:`watershed` labels every
+    cell with its segment end -- no new machinery; segment length is one
     map-side-combinable SUM over the continuing edges joined back to
     their source's label."""
     step = 1 << _LON_BITS

@@ -1,5 +1,6 @@
 """D8 flow routing semantics (terraspark.hydro) on a hand grid."""
 import numpy as np
+from pyspark.sql import functions as F
 
 from terraspark import cells, hydro
 from terraspark.config import TILE
@@ -132,13 +133,13 @@ def test_ruggedness_hand_case(spark):
     assert left["n_nbr"] == 1 and left["tri"] == 3.0 and left["relief"] == 3.0
 
 
-def test_flow_accumulation_unconverged_raises(spark):
-    """A path longer than max_iter must raise, not silently return a
-    truncated (wrong) accumulation."""
+def test_flow_accumulation_unconverged_raises(spark, monkeypatch):
+    """A path crossing more block edges than max_iter allows must raise,
+    not silently return a truncated (wrong) accumulation."""
     import pytest
     from terraspark import hydro
-    from terraspark.hydro import _LON_BITS
-    step = 1 << _LON_BITS
+    # 2-cell blocks: the chain below spans 3 blocks, so it needs 3 rounds
+    monkeypatch.setattr(hydro, "_BLOCK", 2)
     # a 6-cell chain: cell i drains east (dir 0 in D8 order) to i+1
     rows = [(1, i, 0 if i < 5 else -1, 0.1, 0) for i in range(6)]
     flow = spark.createDataFrame(
@@ -247,8 +248,10 @@ def test_strahler_threshold_cuts_headwaters(spark):
     assert out == {_key(0, 1): 1, _key(0, 2): 1}
 
 
-def test_strahler_unconverged_raises(spark):
+def test_strahler_unconverged_raises(spark, monkeypatch):
     import pytest
+    # 2-cell blocks put t in a block of its own: two rounds needed
+    monkeypatch.setattr(hydro, "_BLOCK", 2)
     flow, acc = _y_network(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
         hydro.strahler(flow, acc, threshold=1, max_iter=1)
@@ -274,8 +277,10 @@ def test_flow_length_hand_grid(spark):
     assert out[_key(0, 0)] == round(2.0 + math.sqrt(2.0), 6)
 
 
-def test_flow_length_unconverged_raises(spark):
+def test_flow_length_unconverged_raises(spark, monkeypatch):
     import pytest
+    # 2-cell blocks put t in a block of its own: two rounds needed
+    monkeypatch.setattr(hydro, "_BLOCK", 2)
     flow, _ = _y_network(spark)
     ok = {r["cell"]: r["flen"]
           for r in hydro.flow_length(flow, max_iter=10).collect()}
@@ -625,3 +630,64 @@ def test_hand_matches_python_reference(spark, seed):
         if reached:
             assert abs(r["dist_to_stream"] - dist) < 5e-7, (seed, k)
             assert abs(r["hand"] - (g[k] - g[cur])) < 5e-7, (seed, k)
+
+
+FLOW = "dem_id string, cell long, flow_dir int"
+
+
+def test_missing_target_is_a_pit_except_for_watershed(spark):
+    # row 0 drains east off the frame: (0,3)'s target (0,4) is not a row;
+    # (1,2) joins the chain from the north.  Row 5 is a plain two-cell
+    # basin.  Accumulation and flow length end such a path at (0,3) as
+    # at a pit; watershed drops (0,3) and its whole upstream.
+    rows = ([("d", _key(0, i), 0) for i in range(4)]
+            + [("d", _key(1, 2), 6), ("d", _key(5, 0), 0),
+               ("d", _key(5, 1), -1)])
+    flow = spark.createDataFrame(rows, FLOW)
+    acc = {r["cell"]: r["acc"]
+           for r in hydro.flow_accumulation(flow).collect()}
+    assert acc == {_key(0, 0): 1, _key(0, 1): 2, _key(1, 2): 1,
+                   _key(0, 2): 4, _key(0, 3): 5, _key(5, 0): 1,
+                   _key(5, 1): 2}
+    flen = {r["cell"]: r["flen"] for r in hydro.flow_length(flow).collect()}
+    assert flen == {_key(0, 0): 0.0, _key(0, 1): 1.0, _key(1, 2): 0.0,
+                    _key(0, 2): 2.0, _key(0, 3): 3.0, _key(5, 0): 0.0,
+                    _key(5, 1): 1.0}
+    ws = {r["cell"]: (r["basin"], r["basin_size"])
+          for r in hydro.watershed(flow).collect()}
+    assert ws == {_key(5, 0): (_key(5, 1), 2), _key(5, 1): (_key(5, 1), 2)}
+
+
+def test_fill_sinks_drops_cells_without_in_grid_neighbour(spark):
+    # a 3x3 bowl plus one isolated cell: the isolated cell has no
+    # in-grid neighbour and is absent from the output (the numpy model
+    # shares this behaviour); the bowl's centre fills to its rim minimum
+    rows = [("d", _key(la, lo), 1.0 if (la, lo) == (1, 1) else 2.0 + la)
+            for la in range(3) for lo in range(3)]
+    rows.append(("d", _key(9, 9), 0.5))
+    out = {r["cell"]: r for r in
+           hydro.fill_sinks(_elev_df(spark, rows)).collect()}
+    assert set(out) == {_key(la, lo) for la in range(3) for lo in range(3)}
+    assert out[_key(1, 1)]["filled"] == 2.0
+    assert out[_key(1, 1)]["fill_depth"] == 1.0
+
+
+@pytest.mark.parametrize("block", [None, 1])
+def test_cyclic_flow_raises(spark, monkeypatch, block):
+    # (0,0) -> E -> (0,1) -> W -> (0,0), with (1,0) draining into the
+    # cycle; block 1 puts the cycle across a block edge.  A flow frame
+    # with a cycle is not a forest: the sums never settle
+    if block is not None:
+        monkeypatch.setattr(hydro, "_BLOCK", block)
+    flow = spark.createDataFrame(
+        [("c", _key(0, 0), 0), ("c", _key(0, 1), 4), ("c", _key(1, 0), 6)],
+        FLOW)
+    for op in (hydro.flow_accumulation, hydro.flow_length):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            op(flow, max_iter=3).collect()
+    # watershed and strahler find no outlet on a cycle either
+    acc = flow.select("dem_id", "cell", F.lit(9).cast("long").alias("acc"))
+    for run in (lambda: hydro.watershed(flow, max_iter=3),
+                lambda: hydro.strahler(flow, acc, threshold=1, max_iter=3)):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            run().collect()
