@@ -1195,9 +1195,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def img_watershed(spark, sf_dir):
         """Watershed labeling (hydro.watershed): every cell labeled by
         the pit/outlet its drainage path terminates at, by the same
-        per-block solve as flow accumulation: numpy pointer doubling to
-        the pit or halo outlet inside each block, basin size = the
-        accumulation at the pit.  The oracle walks each cell to its root
+        block rounds as flow accumulation: numpy pointer doubling to
+        the pit or halo outlet inside each block, basin sizes counted
+        once the labels settle.  The oracle walks each cell to its root
         with a recursive CTE over the same SQL-recomputed forest and
         counts basin sizes, so the block solve is checked against the
         closed-form walk."""

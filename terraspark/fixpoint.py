@@ -24,11 +24,9 @@ log = logging.getLogger(__name__)
 
 
 def fixpoint(state: DataFrame, step: Callable[[DataFrame], DataFrame],
-             changed: Column | Callable[[DataFrame], int], max_iter: int,
-             name: str) -> DataFrame:
+             changed: Column, max_iter: int, name: str) -> DataFrame:
     """Apply ``state = step(state)`` until no row of the new state
-    satisfies ``changed``; returns that state.  ``changed`` may instead
-    be a function that counts those rows in the new state itself.
+    satisfies ``changed``; returns that state.
 
     Each round's jobs carry the description ``fixpoint:<name>:r<k>``
     (the caller's description comes back on exit; the job group is left
@@ -45,10 +43,11 @@ def fixpoint(state: DataFrame, step: Callable[[DataFrame], DataFrame],
             sc.setJobDescription(f"fixpoint:{name}:r{k}")
             t0 = time.perf_counter()
             # lazy: the count below is the round's only action, so it
-            # both materializes the checkpoint and reads the changed rows
+            # both materializes the checkpoint and reads the changed rows;
+            # counted on the JVM row RDD, one job, where a SQL count() is
+            # two under AQE (its single-partition exchange, then the sum)
             state = step(state).localCheckpoint(eager=False)
-            n = (state.where(changed).count()
-                 if isinstance(changed, Column) else changed(state))
+            n = state.where(changed)._jdf.rdd().count()
             log.debug("fixpoint %s round %d changed %d in %.3f s",
                       name, k, n, time.perf_counter() - t0)
             if n == 0:

@@ -13,14 +13,13 @@ at most 8 candidates.
 
 The five flow operators (flow_accumulation, watershed, flow_length,
 strahler, fill_sinks) are block-local (Barnes 2016): cells are keyed to
-_BLOCK x _BLOCK blocks from each DEM's minimum (ilat, ilon), every
-block-edge cell is copied once into each neighbouring block as a
-read-only halo ring, and one applyInPandas call per (dem_id, block)
-solves the block in numpy -- a topological sweep, or a priority-flood --
-with the halo values held fixed.  The shared fixpoint driver repeats
-that round only while values still cross block edges, so ``max_iter``
-bounds block-edge crossings, a DEM that fits one block settles in one
-round, and Python memory per group is bounded by (_BLOCK + 2)^2 rows.
+_BLOCK x _BLOCK blocks from each DEM's minimum (ilat, ilon), each
+block-edge cell is copied into every neighbouring block as a read-only
+halo ring, and one applyInPandas call per (dem_id, block) solves the
+block in numpy with the halo held fixed.  The fixpoint driver repeats
+rounds only while values cross block edges, so ``max_iter`` bounds
+block-edge crossings, a one-block DEM settles in one round, and a group
+holds at most (_BLOCK + 2)^2 rows.
 
 Direction semantics (grid-index deltas; ilat +1 = north, ilon +1 = east):
 dir 0..7 = E, NE, N, NW, W, SW, S, SE; dist = sqrt(2) on diagonals; the
@@ -133,10 +132,11 @@ def flow_accumulation(flow: DataFrame, max_iter: int = 512) -> DataFrame:
 
 def _acc_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
     acc = _halo(pdf, own, "acc", 1)
+    ok = _halo(pdf, own, "ok", True).astype(bool)
 
     def visit(src, dst):
         np.add.at(acc, dst, acc[src])
-    pdf["ok"] = _sweep(pdf, own, visit)
+    pdf["ok"] = ok & _sweep(pdf, own, visit, ok)
     pdf["acc"] = acc
     return own
 
@@ -145,40 +145,41 @@ def watershed(flow: DataFrame, max_iter: int = 40) -> DataFrame:
     """(dem_id, cell, basin, basin_size): watershed labeling -- every
     cell labeled by the pit/outlet cell its drainage path terminates at,
     plus the size of that basin.  A cell whose path reaches a target
-    that is not a row of ``flow`` is dropped, with its whole upstream.
-
-    Per block, the basin size is the flow accumulation at the pit, and
-    one numpy pointer-doubling pass hands every cell the label and size
-    of the pit, or of the halo cell, its path ends at.  Sizes travel down
-    a basin and labels back up, so a basin spanning k block edges takes
-    up to 2k + 1 rounds."""
-    one, no = F.lit(1).cast("long"), F.lit(False)
+    that is not a row of ``flow`` is dropped, with its whole upstream; a
+    flow_dir past 7 marks a pit.  Per block, numpy pointer doubling
+    hands every cell the label of the pit, or halo cell, its path ends
+    at (k + 1 rounds for a basin spanning k block edges); sizes are
+    counted afterwards.  On a flow cycle within one block, doubling
+    settles iff the cycle's length is a power of two, as it would over
+    the whole frame; a path reaching a cycle across a block edge never
+    settles."""
     state = _blocks(flow.select("dem_id", "cell", "flow_dir")).select(
-        "*", one.alias("acc"), no.alias("ok"), F.col("cell").alias("basin"),
-        one.alias("basin_size"), no.alias("gone"), no.alias("done"))
-    return (_block_fixpoint(state, _basin_kernel, max_iter, "watershed",
-                            ~F.col("done"))
-            .where(~F.col("gone"))
-            .select("dem_id", "cell", "basin", "basin_size"))
+        "*", F.col("cell").alias("basin"),
+        *[F.lit(False).alias(c) for c in ("gone", "cyc", "done")])
+    cur = _block_fixpoint(state, _basin_kernel, max_iter, "watershed",
+                          ~F.col("done")).where(~F.col("gone"))
+    return cur.select("dem_id", "cell", "basin", F.count("*").over(
+        Window.partitionBy("dem_id", "basin")).alias("basin_size"))
 
 
 def _basin_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
-    _acc_kernel(pdf, own)
     n, t = len(pdf), _targets(pdf)
     fd = pdf["flow_dir"].to_numpy(np.int64)
     # roots: halo rows, pits, and cells whose target is not in the group
     # -- dropped, with everything that drains to them
-    pit, gone = own & (fd < 0), _halo(pdf, own, "gone", (fd >= 0) & (t < 0))
-    root = ~own | pit | gone.astype(bool)
-    basin = _halo(pdf, own, "basin", pdf["cell"])
-    size = np.where(pit, pdf["acc"], pdf["basin_size"])
-    done = np.where(pit, pdf["ok"], _halo(pdf, own, "done", True))
+    pit = own & ((fd < 0) | (fd > 7))
+    gone = _halo(pdf, own, "gone", (fd >= 0) & (t < 0)).astype(bool)
+    root = ~own | pit | gone
     nxt = np.where(root, np.arange(n), t)
     for _ in range(n.bit_length()):
         nxt = nxt[nxt]
-    # a row that still points at a non-root sits on a cycle
-    pdf["basin"], pdf["basin_size"] = basin[nxt], size[nxt]
-    pdf["gone"], pdf["done"] = gone[nxt], done[nxt] & root[nxt]
+    # 2^j >= n hops end at a root, or on a cycle, settled iff its length
+    # divides 2^j; a label from a cycle across a block edge would need the
+    # path's length modulo the cycle's, so it never settles
+    cyc, done = _halo(pdf, own, "cyc", False), _halo(pdf, own, "done", True)
+    pdf["done"] = done[nxt] & (nxt[nxt] == nxt) & ~(cyc[nxt] & ~own[nxt])
+    pdf["basin"] = _halo(pdf, own, "basin", pdf["cell"])[nxt]
+    pdf["gone"], pdf["cyc"] = gone[nxt], cyc[nxt] | ~root[nxt]
     return own
 
 
@@ -229,21 +230,22 @@ def _block_fixpoint(state: DataFrame, kernel, max_iter: int, name: str,
     satisfies ``changed`` (default: not ``ok``, its value not final).
     Each row goes to its block and, as a halo row, to the blocks in
     ``nb``; ``kernel(pdf, own)`` solves one (dem_id, block) group in
-    place and returns the mask of rows to keep.  Changed rows are
-    counted on the JVM's row RDD: one job, where a SQL count takes two."""
+    place and returns the mask of rows to keep.  Round one reuses the
+    DEM-extent window's exchange: one task solves all blocks of a DEM.
+    Later rounds shuffle by (dem_id, block), spreading them over tasks."""
     cols, schema = state.columns, state.schema
-    changed = ~F.col("ok") if changed is None else changed
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
         return pdf.loc[kernel(pdf, pdf["_h"].to_numpy() == 0), cols]
 
     def step(cur: DataFrame) -> DataFrame:
         halo = F.posexplode(F.concat(F.array("blk"), "nb")).alias("_h", "_k")
-        return (cur.select("*", halo).groupBy("dem_id", "_k")
-                .applyInPandas(solve, schema))
+        rows = cur.select("*", halo)
+        if cur is not state:
+            rows = rows.repartition("dem_id", "_k")
+        return rows.groupBy("dem_id", "_k").applyInPandas(solve, schema)
 
-    return fixpoint(state, step,
-                    lambda cur: cur.where(changed)._jdf.rdd().count(),
+    return fixpoint(state, step, ~F.col("ok") if changed is None else changed,
                     max_iter, name)
 
 
@@ -255,14 +257,14 @@ def _lookup(cell: np.ndarray, key: np.ndarray) -> np.ndarray:
     return np.where(cell[hit] == key, hit, -1)
 
 
-def _targets(pdf: pd.DataFrame) -> np.ndarray:
-    """Row of each cell's D8 target in the group: -1 at pits and where the
-    target is not in the group; a flow_dir past 7 names the cell itself,
-    as in :func:`_flow_target` -- a cycle."""
+def _targets(pdf: pd.DataFrame, own: np.ndarray | None = None) -> np.ndarray:
+    """Row of each cell's D8 target in the group: -1 at pits, where the
+    target is not in the group and, given ``own``, where it is a halo row;
+    a flow_dir past 7 names the cell itself, as in :func:`_flow_target`."""
     cell = pdf["cell"].to_numpy(np.int64)
     fd = pdf["flow_dir"].to_numpy(np.int64)
     t = _lookup(cell, cell + np.where(fd < 8, _DELTA[fd.clip(0, 7)], 0))
-    return np.where(fd >= 0, t, -1)
+    return np.where((fd >= 0) & (True if own is None else own[t]), t, -1)
 
 
 def _halo(pdf: pd.DataFrame, own: np.ndarray, col: str, start) -> np.ndarray:
@@ -270,26 +272,26 @@ def _halo(pdf: pd.DataFrame, own: np.ndarray, col: str, start) -> np.ndarray:
     return np.where(own, start, pdf[col].to_numpy())
 
 
-def _sweep(pdf: pd.DataFrame, own: np.ndarray, visit) -> np.ndarray:
+def _sweep(pdf: pd.DataFrame, own: np.ndarray, visit,
+           ok: np.ndarray | None = None) -> np.ndarray:
     """Kahn's sweep of the flow edges into the block's own rows, upstream
-    first: ``visit(src, dst)`` gets the edges out of each frontier.
-    Returns ``ok``: every inflow's value is final and the row is not on
-    a cycle (which never enters a frontier)."""
-    t = _targets(pdf)
-    tgt = np.where((t >= 0) & own[t], t, -1)
-    ok = _halo(pdf, own, "ok", True).astype(bool)
-    done = np.zeros(len(t), bool)
-    indeg = np.bincount(tgt[tgt >= 0], minlength=len(t))
+    first: ``visit(src, dst)`` gets the edges out of each frontier, and
+    ``ok``, if given, is and-ed along them.  Returns the rows reached:
+    none on a cycle, or downstream of one."""
+    tgt = _targets(pdf, own)
+    done = np.zeros(len(tgt), bool)
+    indeg = np.bincount(tgt[tgt >= 0], minlength=len(tgt))
     f = np.flatnonzero(indeg == 0)
     while f.size:
         done[f] = True
         src = f[tgt[f] >= 0]
         dst = tgt[src]
         visit(src, dst)
-        np.logical_and.at(ok, dst, ok[src])
+        if ok is not None:
+            np.logical_and.at(ok, dst, ok[src])
         np.subtract.at(indeg, dst, 1)
         f = np.unique(dst[indeg[dst] == 0])
-    return ok & done
+    return done
 
 
 def ruggedness(elev: DataFrame) -> DataFrame:
@@ -362,10 +364,10 @@ def focal_stats(elev: DataFrame, radius: int = 2) -> DataFrame:
                  .alias("frange")))
 
 
-def _rays(elev: DataFrame, max_dist: int) -> tuple[DataFrame, DataFrame]:
-    """The 8 D8 rays out to ``max_dist``: (nbr, other) where nbr holds one
-    row per cell and ray step, s = (dir, k, delta, dist) and its
-    ``target`` cell, to equi-join with other's (target, nelev)."""
+def _rays(elev: DataFrame, max_dist: int) -> DataFrame:
+    """The 8 D8 rays out to ``max_dist``: one row per cell and in-grid
+    ray step, s = (dir, k, delta, dist), with the step's ``target`` cell
+    and its elevation ``nelev``."""
     step = 1 << _LON_BITS
     entries = ", ".join(
         f"named_struct('dir', {d}, 'k', {k}, "
@@ -377,7 +379,7 @@ def _rays(elev: DataFrame, max_dist: int) -> tuple[DataFrame, DataFrame]:
            .withColumn("target", F.col("cell") + F.col("s.delta")))
     other = elev.select("dem_id", F.col("cell").alias("target"),
                         F.col("elev").alias("nelev"))
-    return nbr, other
+    return nbr.join(other, ["dem_id", "target"])
 
 
 def openness(elev: DataFrame, max_dist: int = 4) -> DataFrame:
@@ -396,8 +398,7 @@ def openness(elev: DataFrame, max_dist: int = 4) -> DataFrame:
     (cell, dir) max, then per cell avg/max over <= 8 exact doubles).
     Border cells simply find fewer rows to join -- identical
     arithmetic on the oracle side."""
-    nbr, other = _rays(elev, max_dist)
-    j = nbr.join(other, ["dem_id", "target"])
+    j = _rays(elev, max_dist)
     tan = (F.col("nelev") - F.col("elev")) / F.col("s.dist")
     per_dir = (j.groupBy("dem_id", "cell", F.col("s.dir").alias("dir"))
                .agg(F.max(tan).alias("ht")))
@@ -415,9 +416,11 @@ def strahler(flow: DataFrame, acc: DataFrame, threshold: int = 5,
     watershed hydrology stack.
 
     Stream cells have accumulation >= threshold; stream edges are the D8
-    edges between them.  Order is 1 without stream inflow, m + 1 where
-    >= 2 inflows carry the max inflow order m, else m: one topological
-    sweep over the stream edges per block."""
+    edges between them.  Order is the least fixpoint, from all 1, of
+    ord = 1 without stream inflow, m + 1 where >= 2 inflows carry the
+    max inflow order m, else m: per block a topological sweep over the
+    stream edges, then plain relaxation on or below a flow cycle; rounds
+    repeat while block-edge orders move."""
     # acc and flow_dir as a union merged per cell after _blocks' exchange;
     # a join would add two exchanges of its own
     both = (acc.where(F.col("acc") >= threshold)
@@ -430,12 +433,14 @@ def strahler(flow: DataFrame, acc: DataFrame, threshold: int = 5,
                   F.coalesce(F.max("flow_dir"), F.lit(-1)).alias("flow_dir"),
                   F.first("blk").alias("blk"), F.first("nb").alias("nb"))
              .where(F.col("acc").isNotNull())
-             .select("*", F.lit(1).alias("ord"), F.lit(False).alias("ok")))
-    return (_block_fixpoint(state, _strahler_kernel, max_iter, "strahler")
+             .select("*", F.lit(1).alias("ord"), F.lit(1).alias("old")))
+    return (_block_fixpoint(state, _strahler_kernel, max_iter, "strahler",
+                            F.expr("size(nb) > 0 and ord != old"))
             .select("dem_id", "cell", "acc", F.col("ord").alias("strahler")))
 
 
 def _strahler_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
+    pdf["old"] = pdf["ord"]
     order = _halo(pdf, own, "ord", 1)
     best = np.zeros(len(pdf), np.int64)   # max inflow order so far
     mult = np.zeros(len(pdf), np.int64)   # inflows carrying it
@@ -450,8 +455,17 @@ def _strahler_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
         np.maximum.at(best, dst, o)
         mult[dst[best[dst] > before]] = 0
         np.add.at(mult, dst, o == best[dst])
-    pdf["ok"] = _sweep(pdf, own, visit)
+    left = own & ~_sweep(pdf, own, visit)
     settle(own)
+    # on or below a cycle: synchronous rounds from 1, as over the frame
+    tgt = _targets(pdf, own)
+    src = np.flatnonzero((tgt >= 0) & left[tgt])
+    dst, order[left], prev = tgt[src], 1, None
+    while src.size and not np.array_equal(order, prev):
+        prev, best[:], mult[:] = order.copy(), 0, 0
+        np.maximum.at(best, dst, order[src])
+        np.add.at(mult, dst, order[src] == best[dst])
+        settle(left)
     pdf["ord"] = order
     return own
 
@@ -476,10 +490,12 @@ def flow_length(flow: DataFrame, max_iter: int = 512) -> DataFrame:
 def _flen_kernel(pdf: pd.DataFrame, own: np.ndarray) -> np.ndarray:
     flen = _halo(pdf, own, "flen", 0.0)
     step = np.array([d[3] for d in D8])[pdf["flow_dir"].clip(0, 7)]
+    ok = _halo(pdf, own, "ok", True).astype(bool)
+
 
     def visit(src, dst):
         np.maximum.at(flen, dst, flen[src] + step[src])
-    pdf["ok"] = _sweep(pdf, own, visit)
+    pdf["ok"] = ok & _sweep(pdf, own, visit, ok)
     pdf["flen"] = flen
     return own
 
@@ -705,11 +721,10 @@ def viewshed(elev: DataFrame, max_dist: int = 4) -> DataFrame:
     prefix-max visibility test is a closed-form CASE over the pivoted
     t_1..t_max columns (no window function, no iteration).  Pure f64
     ratio arithmetic -- no transcendental in the visibility predicate."""
-    nbr, other = _rays(elev, max_dist)
     tan = (F.col("nelev") - F.col("elev")) / F.col("s.dist")
     t = {k: F.max(F.when(F.col("s.k") == k, tan))
          for k in range(1, max_dist + 1)}
-    ray = (nbr.join(other, ["dem_id", "target"])
+    ray = (_rays(elev, max_dist)
            .groupBy("dem_id", "cell", F.col("s.dir").alias("dir"))
            .agg(F.count("*").alias("n_t"),
                 *[t[k].alias(f"t{k}") for k in range(1, max_dist + 1)]))
@@ -838,8 +853,7 @@ def sky_view_factor(elev: DataFrame, max_dist: int = 4) -> DataFrame:
     6-dp.  Consumes the :func:`openness` join shape unchanged -- one
     delta-key fan-out, one equi-join, two map-side-combinable
     groupBys."""
-    nbr, other = _rays(elev, max_dist)
-    j = nbr.join(other, ["dem_id", "target"])
+    j = _rays(elev, max_dist)
     tan = (F.col("nelev") - F.col("elev")) / F.col("s.dist")
     per_dir = (j.groupBy("dem_id", "cell", F.col("s.dir").alias("dir"))
                .agg(F.max(tan).alias("ht")))
@@ -864,9 +878,8 @@ def solar_access(elev: DataFrame, sun_tan: float = 0.25,
     transcendental.  Reuses the :func:`openness` join shape: one
     delta-key fan-out, one equi-join, two map-side-combinable
     groupBys."""
-    nbr, other = _rays(elev, max_dist)
     tan = (F.col("nelev") - F.col("elev")) / F.col("s.dist")
-    per_dir = (nbr.join(other, ["dem_id", "target"])
+    per_dir = (_rays(elev, max_dist)
                .groupBy("dem_id", "cell", F.col("s.dir").alias("dir"))
                .agg(F.max(tan).alias("ht")))
     thresh = F.expr(f"CAST('{sun_tan!r}' AS DOUBLE)")

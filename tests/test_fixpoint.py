@@ -3,6 +3,7 @@ length against plain one-hop references, multi-block results equal to
 one-block ones, loud non-convergence, and no session conf side
 effects."""
 import logging
+import re
 import threading
 
 import numpy as np
@@ -143,6 +144,26 @@ def test_multi_block_equals_one_block(spark, monkeypatch):
     assert {(r[0], r[1]): r[2] for r in many[0]} == acc_ref
     assert {(r[0], r[1]): r[2] for r in many[2]} == \
         {k: round(v, 6) for k, v in flen_ref.items()}
+
+
+def test_later_block_rounds_shuffle_by_block(spark, monkeypatch):
+    # round one groups within the DEM-extent window's exchange on dem_id
+    # alone; every later round shuffles by (dem_id, block)
+    monkeypatch.setattr(hydro, "_BLOCK", 8)
+    plans, fixpoint = [], hydro.fixpoint
+
+    def spy(state, step, changed, max_iter, name):
+        def traced(cur):
+            out = step(cur)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+        return fixpoint(state, traced, changed, max_iter, name)
+    monkeypatch.setattr(hydro, "fixpoint", spy)
+    flow, _ = _forest(spark)
+    hydro.flow_accumulation(flow.where("dem_id = 'chain'")).collect()
+    by_block = r"Exchange hashpartitioning\(dem_id#\d+, _k#\d+"
+    assert len(plans) >= 2 and not re.search(by_block, plans[0])
+    assert all(re.search(by_block, p) for p in plans[1:])
 
 
 def _path_graph(spark, n):

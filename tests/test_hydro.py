@@ -673,21 +673,55 @@ def test_fill_sinks_drops_cells_without_in_grid_neighbour(spark):
 
 
 @pytest.mark.parametrize("block", [None, 1])
-def test_cyclic_flow_raises(spark, monkeypatch, block):
-    # (0,0) -> E -> (0,1) -> W -> (0,0), with (1,0) draining into the
-    # cycle; block 1 puts the cycle across a block edge.  A flow frame
-    # with a cycle is not a forest: the sums never settle
+def test_cyclic_flow(spark, monkeypatch, block):
+    # (0,0) -> E -> (0,1) -> W -> (0,0), with (1,0) and (2,0) draining
+    # into the cycle; block 1 puts the cycle across a block edge
     if block is not None:
         monkeypatch.setattr(hydro, "_BLOCK", block)
+    a, b, c, d = _key(0, 0), _key(0, 1), _key(1, 0), _key(2, 0)
     flow = spark.createDataFrame(
-        [("c", _key(0, 0), 0), ("c", _key(0, 1), 4), ("c", _key(1, 0), 6)],
-        FLOW)
+        [("c", a, 0), ("c", b, 4), ("c", c, 6), ("c", d, 6)], FLOW)
+    # a flow frame with a cycle is not a forest: the sums never settle
     for op in (hydro.flow_accumulation, hydro.flow_length):
         with pytest.raises(RuntimeError, match="did not converge"):
             op(flow, max_iter=3).collect()
-    # watershed and strahler find no outlet on a cycle either
+    # Strahler's relaxation settles: the tributary lifts the cycle to 2
     acc = flow.select("dem_id", "cell", F.lit(9).cast("long").alias("acc"))
-    for run in (lambda: hydro.watershed(flow, max_iter=3),
-                lambda: hydro.strahler(flow, acc, threshold=1, max_iter=3)):
+    out = {r["cell"]: r["strahler"] for r in
+           hydro.strahler(flow, acc, threshold=1, max_iter=4).collect()}
+    assert out == {a: 2, b: 2, c: 1, d: 1}
+    if block is not None:
+        # a path that reaches a cycle across a block edge never settles
         with pytest.raises(RuntimeError, match="did not converge"):
-            run().collect()
+            hydro.watershed(flow, max_iter=4).collect()
+        return
+    # doubling over a 2-cycle: each cycle cell is its own basin, and a
+    # cell an odd number of hops up takes the other one
+    ws = {r["cell"]: (r["basin"], r["basin_size"])
+          for r in hydro.watershed(flow).collect()}
+    assert ws == {a: (a, 2), b: (b, 2), c: (b, 2), d: (a, 2)}
+
+
+def test_watershed_cycle_length(spark):
+    # a 4-cycle around a square settles like a 2-cycle; a 3-cycle never
+    a, b, c, d = _key(0, 0), _key(0, 1), _key(1, 1), _key(1, 0)
+    up = _key(2, 0)
+    square = spark.createDataFrame(
+        [("c", a, 0), ("c", b, 2), ("c", c, 4), ("c", d, 6), ("c", up, 6)],
+        FLOW)
+    ws = {r["cell"]: r["basin"] for r in hydro.watershed(square).collect()}
+    assert ws == {a: a, b: b, c: c, d: d, up: c}
+    triangle = spark.createDataFrame(
+        [("c", a, 0), ("c", b, 2), ("c", c, 5)], FLOW)
+    with pytest.raises(RuntimeError, match="did not converge in 5"):
+        hydro.watershed(triangle, max_iter=5).collect()
+
+
+def test_watershed_flow_dir_past_7_is_a_pit(spark):
+    # flow_dir 9 names no D8 step: the cell drains to itself, a pit for
+    # watershed (accumulation and flow length see a cycle there)
+    rows = [("d", _key(0, 0), 9), ("d", _key(0, 1), 4), ("d", _key(0, 2), 4),
+            ("d", _key(1, 0), 6)]
+    ws = {r["cell"]: (r["basin"], r["basin_size"]) for r in
+          hydro.watershed(spark.createDataFrame(rows, FLOW)).collect()}
+    assert ws == {r[1]: (_key(0, 0), 4) for r in rows}
