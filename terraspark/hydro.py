@@ -232,7 +232,8 @@ def _block_fixpoint(state: DataFrame, kernel, max_iter: int, name: str,
     ``nb``; ``kernel(pdf, own)`` solves one (dem_id, block) group in
     place and returns the mask of rows to keep.  Round one reuses the
     DEM-extent window's exchange: one task solves all blocks of a DEM.
-    Later rounds shuffle by (dem_id, block), spreading them over tasks."""
+    The solve's output columns carry no partitioning, so later rounds
+    shuffle by (dem_id, block) and spread the blocks over tasks."""
     cols, schema = state.columns, state.schema
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -240,10 +241,8 @@ def _block_fixpoint(state: DataFrame, kernel, max_iter: int, name: str,
 
     def step(cur: DataFrame) -> DataFrame:
         halo = F.posexplode(F.concat(F.array("blk"), "nb")).alias("_h", "_k")
-        rows = cur.select("*", halo)
-        if cur is not state:
-            rows = rows.repartition("dem_id", "_k")
-        return rows.groupBy("dem_id", "_k").applyInPandas(solve, schema)
+        return (cur.select("*", halo).groupBy("dem_id", "_k")
+                .applyInPandas(solve, schema))
 
     return fixpoint(state, step, ~F.col("ok") if changed is None else changed,
                     max_iter, name)
