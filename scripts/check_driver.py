@@ -74,7 +74,10 @@ def main():
         p = os.path.join(SF, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    spark = build_session("check-driver", cores=16)
+    # one task slot per core of this host: a wider session than the
+    # host can back gets its JVM killed for memory on small machines
+    spark = build_session("check-driver", cores=int(
+        os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())))
     fails = []
     for name in picks:
         try:

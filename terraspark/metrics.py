@@ -11,7 +11,7 @@ blobs (one mapInPandas, then JVM-side aggs):
   IQR/median -> exact ``percentile`` (linear interpolation == np.percentile)
   r^2  -> corr(value, lum)^2    (scipy.linregress rvalue == Pearson r)
   outliers(threshold) -> conditional count vs the ORIGINAL image's min/max
-          (metrics.py:151-165; orig stats joined back, J3 pattern)
+          (metrics.py:151-165; orig stats broadcast back, J3 pattern)
   outliers(IQR fence) -> two-phase: percentile agg, broadcast back,
           conditional count (metrics.py:168-181)
 
@@ -19,10 +19,17 @@ Pixels with non-finite values are excluded on both engine and oracle sides
 (the reference feeds raw GDAL bytes which never contain NaN; our raw_f32
 NoData is NaN -- documented divergence, consistent everywhere).
 
-Scale: the exploded frame is (tiles x 4096) rows but only 5 narrow columns;
-partial aggregation (map-side combine) reduces it before any shuffle.  The
-exact percentile is the one sort-heavy agg -- acceptable per group; swap
-``percentile_approx`` at 100TB (flagged in the docstring, tested exact).
+Scale: the exploded frame is (tiles x 4096) rows but only 5-6 narrow
+columns.  The fan-out runs on every core: the tile rows are hash-spread on
+their identity to ``defaultParallelism`` partitions first (an AOI join
+keeps its input's layout, which can put most tiles of an evaluation in one
+scan split), and each Python worker yields frames of at most
+``FRAME_TILES`` tiles, so its memory is bounded whatever the Arrow batch
+size.  ``evaluate_metrics`` then reads the pixel rows twice: one
+aggregation, and one counting pass against a single broadcast table of
+thresholds; partial aggregation (map-side combine) reduces both before any
+shuffle.  The exact percentile is the one sort-heavy agg -- acceptable per
+group; ``approx=True`` swaps in ``approx_percentile`` at 100TB.
 
 Correlation/rose/histogram evaluation (A12/A13) live in SQL-expressible
 form in __spark_entry__.py as well; ``hist2d`` and ``rose_means`` here are
@@ -30,80 +37,87 @@ the engine's named operators.
 """
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .config import TILE
 
 PIXELS_SCHEMA = ("group_id int, method string, band int, value double, "
                  "lum double")
+TERRAIN_PIXELS_SCHEMA = ("group_id int, method string, band int, "
+                         "value double, slope_deg double, aspect_deg double")
 
 ORIG_KEY = "__orig__"
+
+# identity of an evaluation tile row; the fan-out is spread on it
+_TILE_KEY = ("image_id", "band", "tile_x", "tile_y", "method")
+
+# tiles per yielded pixel frame: 64 x 4096 = 262,144 rows of ~5 doubles
+FRAME_TILES = 64
+
+
+def pixel_frames(batches: Iterator[pd.DataFrame], tile: int,
+                 method_col: str,
+                 blobs: tuple[tuple[str, str, Callable | None], ...]
+                 ) -> Iterator[pd.DataFrame]:
+    """Tile batches -> pixel frames of at most ``FRAME_TILES`` tiles each.
+
+    ``blobs`` lists ``(output column, float32 blob column, transform)``,
+    ``value`` first: its non-finite pixels drop the pixel from every
+    output column.  Each blob is widened to float64 before its transform
+    (None keeps it).  Rows come out tile by tile, pixels in blob order."""
+    n = tile * tile
+    for pdf in batches:
+        for lo in range(0, len(pdf), FRAME_TILES):
+            part = pdf.iloc[lo:lo + FRAME_TILES]
+            arrs = [np.frombuffer(b"".join(part[col].tolist()),
+                                  dtype="<f4").reshape(len(part), n)
+                    for _, col, _ in blobs]
+            finite = np.isfinite(arrs[0])
+            rows = np.repeat(np.arange(len(part)), finite.sum(axis=1))
+            frame = {
+                "group_id": part["group_id"].to_numpy()[rows],
+                "method": part[method_col].to_numpy()[rows],
+                "band": part["band"].to_numpy()[rows],
+            }
+            for (out, _, fn), arr in zip(blobs, arrs):
+                v = arr[finite].astype(np.float64)
+                frame[out] = v if fn is None else fn(v)
+            yield pd.DataFrame(frame)
+
+
+def _explode(df: DataFrame, tile: int, method_col: str, blobs,
+             schema: str) -> DataFrame:
+    key = [method_col if c == "method" else c for c in _TILE_KEY]
+    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+                            *key)
+    return spread.mapInPandas(
+        lambda batches: pixel_frames(batches, tile, method_col, blobs),
+        schema=schema)
 
 
 def explode_pixels(df: DataFrame, tile: int = TILE,
                    value_col: str = "px", lum_col: str = "lum_px",
                    method_col: str = "method") -> DataFrame:
     """Tile rows -> pixel rows (group_id, method, band, value, lum)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = tile * tile
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            px = np.frombuffer(b"".join(pdf[value_col].tolist()),
-                               dtype="<f4").reshape(len(pdf), n)
-            lum = np.frombuffer(b"".join(pdf[lum_col].tolist()),
-                                dtype="<f4").reshape(len(pdf), n)
-            finite = np.isfinite(px)
-            rows = np.repeat(np.arange(len(pdf)), finite.sum(axis=1))
-            yield pd.DataFrame({
-                "group_id": pdf["group_id"].to_numpy()[rows],
-                "method": pdf[method_col].to_numpy()[rows],
-                "band": pdf["band"].to_numpy()[rows],
-                "value": px[finite].astype(np.float64),
-                "lum": lum[finite].astype(np.float64),
-            })
-
-    return df.mapInPandas(gen, schema=PIXELS_SCHEMA)
-
-
-TERRAIN_PIXELS_SCHEMA = ("group_id int, method string, band int, "
-                         "value double, slope_deg double, aspect_deg double")
+    return _explode(df, tile, method_col,
+                    (("value", value_col, None), ("lum", lum_col, None)),
+                    PIXELS_SCHEMA)
 
 
 def explode_pixels_terrain(df: DataFrame, tile: int = TILE) -> DataFrame:
     """Tile rows (px + slope_px + aspect_px) -> pixel rows with terrain in
     DEGREES (the rose diagram evaluates degree bins,
     rose_diagram_eval.py:291-297 calculate_slope(in_radians=False))."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = tile * tile
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            px = np.frombuffer(b"".join(pdf["px"].tolist()),
-                               dtype="<f4").reshape(len(pdf), n)
-            sl = np.frombuffer(b"".join(pdf["slope_px"].tolist()),
-                               dtype="<f4").reshape(len(pdf), n)
-            asp = np.frombuffer(b"".join(pdf["aspect_px"].tolist()),
-                                dtype="<f4").reshape(len(pdf), n)
-            finite = np.isfinite(px)
-            rows = np.repeat(np.arange(len(pdf)), finite.sum(axis=1))
-            yield pd.DataFrame({
-                "group_id": pdf["group_id"].to_numpy()[rows],
-                "method": pdf["method"].to_numpy()[rows],
-                "band": pdf["band"].to_numpy()[rows],
-                "value": px[finite].astype(np.float64),
-                "slope_deg": np.degrees(sl[finite].astype(np.float64)),
-                "aspect_deg": np.degrees(asp[finite].astype(np.float64)),
-            })
-
-    return df.mapInPandas(gen, schema=TERRAIN_PIXELS_SCHEMA)
+    return _explode(df, tile, "method",
+                    (("value", "px", None),
+                     ("slope_deg", "slope_px", np.degrees),
+                     ("aspect_deg", "aspect_px", np.degrees)),
+                    TERRAIN_PIXELS_SCHEMA)
 
 
 def evaluate_metrics(pixels: DataFrame, approx: bool = True,
@@ -111,7 +125,15 @@ def evaluate_metrics(pixels: DataFrame, approx: bool = True,
     """Long metric table (group_id, method, band, metric_id, value).
 
     ``pixels`` must contain the original image's pixels under
-    method == '__orig__' (they provide the static outlier thresholds).
+    method == '__orig__' (they provide the static outlier thresholds); a
+    (group, band) without them yields no rows.
+
+    Two passes over the pixel rows.  The first aggregates the five
+    distribution metrics, the IQR fences and min/max per (group, method,
+    band); a window over (group, band) of that small table gives every
+    row its original image's min/max.  That one table is broadcast into
+    the second pass, which counts both kinds of outlier and carries the
+    first pass's metrics through with ``first()``.
 
     ``approx=True`` (the scale default) computes the quartiles with
     ``approx_percentile`` (Greenwald-Khanna, rank error <= 1/accuracy --
@@ -132,37 +154,39 @@ def evaluate_metrics(pixels: DataFrame, approx: bool = True,
         (F.corr("value", "lum") ** 2).alias("determination_coefficient"),
         F.min("value").alias("vmin"),
         F.max("value").alias("vmax"),
-    ).select(
-        *keys, "std_reduction", "cv_reduction", "determination_coefficient",
-        (F.col("q")[2] - F.col("q")[0]).alias("iqr_reduction"),
-        F.col("q")[1].alias("relative_median_difference"),
-        (F.col("q")[0] - (F.col("q")[2] - F.col("q")[0])).alias("fence_lo"),
-        (F.col("q")[2] + (F.col("q")[2] - F.col("q")[0])).alias("fence_hi"),
-        "vmin", "vmax",
     )
 
     # static thresholds come from the ORIGINAL image per (group, band)
     # (EvalContext.orig_minmax, metrics.py:49-50,160-165)
-    orig_minmax = base.where(F.col("method") == ORIG_KEY).select(
-        "group_id", "band",
-        F.col("vmin").alias("orig_min"), F.col("vmax").alias("orig_max"))
-    fences = base.select(*keys, "fence_lo", "fence_hi")
+    orig = F.col("method") == ORIG_KEY
+    w = Window.partitionBy("group_id", "band")
+    q = F.col("q")
+    thresholds = base.select(
+        *keys, "std_reduction", "cv_reduction", "determination_coefficient",
+        (q[2] - q[0]).alias("iqr_reduction"),
+        q[1].alias("relative_median_difference"),
+        (q[0] - (q[2] - q[0])).alias("fence_lo"),
+        (q[2] + (q[2] - q[0])).alias("fence_hi"),
+        F.min(F.when(orig, F.col("vmin"))).over(w).alias("orig_min"),
+        F.max(F.when(orig, F.col("vmax"))).over(w).alias("orig_max"),
+        F.max(orig).over(w).alias("has_orig"),
+    ).where("has_orig")
 
-    counts = (pixels
-              .join(F.broadcast(orig_minmax), ["group_id", "band"])
-              .join(F.broadcast(fences), keys)
-              .groupBy(*keys)
-              .agg(
-                  F.sum(F.when((F.col("value") < F.col("orig_min"))
-                               | (F.col("value") > F.col("orig_max")), 1)
-                        .otherwise(0)).cast("double").alias("outliers_threshold"),
-                  F.sum(F.when((F.col("value") < F.col("fence_lo"))
-                               | (F.col("value") > F.col("fence_hi")), 1)
-                        .otherwise(0)).cast("double").alias("outliers_iqr"),
-              ))
-
-    wide = base.drop("fence_lo", "fence_hi", "vmin", "vmax") \
-               .join(counts, keys)
+    value = F.col("value")
+    wide = (pixels.join(F.broadcast(thresholds), keys)
+            .groupBy(*keys)
+            .agg(
+                *[F.first(m).alias(m) for m in (
+                    "std_reduction", "cv_reduction", "iqr_reduction",
+                    "relative_median_difference",
+                    "determination_coefficient")],
+                F.sum(F.when((value < F.col("orig_min"))
+                             | (value > F.col("orig_max")), 1)
+                      .otherwise(0)).cast("double").alias("outliers_threshold"),
+                F.sum(F.when((value < F.col("fence_lo"))
+                             | (value > F.col("fence_hi")), 1)
+                      .otherwise(0)).cast("double").alias("outliers_iqr"),
+            ))
     metric_cols = ["std_reduction", "cv_reduction", "iqr_reduction",
                    "relative_median_difference", "outliers_threshold",
                    "outliers_iqr", "determination_coefficient"]
@@ -394,7 +418,6 @@ def hist_equalize_summary(tiles: DataFrame, bins: int = 256) -> DataFrame:
               .groupBy("image_id", "band", "bin")
               .agg(F.sum("cnt").alias("cnt")))
 
-    from pyspark.sql import Window
     wp = Window.partitionBy("image_id", "band")
     cdf = counts.withColumn("n", F.sum("cnt").over(wp)) \
         .withColumn("cum", F.sum("cnt").over(

@@ -76,7 +76,8 @@ def test_repetition_closed_form(spark):
                  "x y z",          # bigrams: xy,yz -> all distinct
                  "solo"],          # < 2 tokens -> no bigrams, no row
     }), "doc_id long, text string")
-    out = textstats.repetition(docs).toPandas().set_index("doc_id")
+    out = textstats.repetition(docs).toPandas().set_index("doc_id") \
+        .sort_index()
     assert list(out.index) == [0, 1]
     assert out.loc[0, "n_bigrams"] == 4
     assert out.loc[0, "top_bigram_frac"] == 0.5

@@ -14,7 +14,9 @@ EVAL_METHODS = ("cosine_t", "scs", "teillet")
 
 
 @pytest.fixture(scope="module")
-def metric_frames(spark, fixture_tables):
+def eval_pixels(spark, fixture_tables):
+    """Pixel rows of the original and three corrected images per AOI
+    group, pinned so every test below reads the same partitions."""
     images, scenes, dem, aoi, grids, oracle = fixture_tables
     eng = TopoEngine(spark)
     images_df = to_spark(spark, images, IMAGES_SCHEMA)
@@ -36,12 +38,148 @@ def metric_frames(spark, fixture_tables):
                               "cell", "method", "px", "lum_px")
     both = orig.unionByName(corr)
     grouped = joins.aoi_containment_join(both, aoi_df)
-    pixels = tmetrics.explode_pixels(grouped)
-    got = tmetrics.evaluate_metrics(pixels, approx=False).toPandas()
+    pixels = tmetrics.explode_pixels(grouped).persist()
+    pixels.count()
+    yield pixels
+    pixels.unpersist()
+    eng.unpersist()
+
+
+@pytest.fixture(scope="module")
+def metric_frames(eval_pixels, fixture_tables):
+    oracle = fixture_tables[-1]
+    got = tmetrics.evaluate_metrics(eval_pixels, approx=False).toPandas()
     exp = oracle.expected_metrics()
     exp = exp[exp["method"].isin([*EVAL_METHODS, tmetrics.ORIG_KEY])]
-    eng.unpersist()
     return got, exp
+
+
+def _three_pass_metrics(pixels):
+    """Exact-mode evaluate_metrics as it was written with three readers
+    of its per-group aggregate: original min/max and IQR fences joined
+    back to the pixels as two broadcasts, the counts joined to the
+    aggregate."""
+    keys = ["group_id", "method", "band"]
+    q = F.col("q")
+    base = pixels.groupBy(*keys).agg(
+        F.stddev_pop("value").alias("std_reduction"),
+        (F.stddev_pop("value") / F.mean("value")).alias("cv_reduction"),
+        F.expr("percentile(value, array(0.25, 0.5, 0.75))").alias("q"),
+        (F.corr("value", "lum") ** 2).alias("determination_coefficient"),
+        F.min("value").alias("vmin"), F.max("value").alias("vmax"),
+    ).select(
+        *keys, "std_reduction", "cv_reduction", "determination_coefficient",
+        (q[2] - q[0]).alias("iqr_reduction"),
+        q[1].alias("relative_median_difference"),
+        (q[0] - (q[2] - q[0])).alias("fence_lo"),
+        (q[2] + (q[2] - q[0])).alias("fence_hi"), "vmin", "vmax")
+    orig_minmax = base.where(F.col("method") == tmetrics.ORIG_KEY).select(
+        "group_id", "band", F.col("vmin").alias("orig_min"),
+        F.col("vmax").alias("orig_max"))
+    fences = base.select(*keys, "fence_lo", "fence_hi")
+    v = F.col("value")
+    counts = (pixels.join(F.broadcast(orig_minmax), ["group_id", "band"])
+              .join(F.broadcast(fences), keys).groupBy(*keys).agg(
+        F.sum(F.when((v < F.col("orig_min")) | (v > F.col("orig_max")), 1)
+              .otherwise(0)).cast("double").alias("outliers_threshold"),
+        F.sum(F.when((v < F.col("fence_lo")) | (v > F.col("fence_hi")), 1)
+              .otherwise(0)).cast("double").alias("outliers_iqr")))
+    wide = base.drop("fence_lo", "fence_hi", "vmin", "vmax") \
+        .join(counts, keys)
+    cols = ["std_reduction", "cv_reduction", "iqr_reduction",
+            "relative_median_difference", "outliers_threshold",
+            "outliers_iqr", "determination_coefficient"]
+    stack = ", ".join(f"'{m}', {m}" for m in cols)
+    return wide.selectExpr(
+        *keys, f"stack({len(cols)}, {stack}) as (metric_id, value)")
+
+
+def _sorted(pdf):
+    return pdf.sort_values(["group_id", "method", "band", "metric_id"]) \
+        .reset_index(drop=True)
+
+
+def test_evaluate_metrics_equals_three_pass_exactly(eval_pixels,
+                                                    metric_frames):
+    """Same pixel partitions in, the same bits out: the single-reader
+    plan changes where the aggregate goes, not what it computes."""
+    got = _sorted(metric_frames[0])
+    want = _sorted(_three_pass_metrics(eval_pixels)
+                   .toPandas())
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+def _jobs(spark, action, group):
+    """Number of Spark jobs ``action`` runs (StatusTracker job group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("approx", [False, True])
+def test_evaluate_metrics_job_count(spark, eval_pixels, approx):
+    """Two pixel scans: the aggregate's exchange, the thresholds window's
+    exchange, the broadcast, the counting exchange and the result."""
+    n = _jobs(spark, lambda: tmetrics.evaluate_metrics(
+        eval_pixels, approx=approx).toPandas(), f"eval-jobs-{approx}")
+    assert n <= 5, n
+
+
+def test_group_band_without_original_yields_no_rows(spark):
+    """Thresholds come from the original image of the same (group, band);
+    where it has no pixels there is nothing to compare against and no
+    metric row, for any method."""
+    rows = ([(1, tmetrics.ORIG_KEY, 0, float(v), 0.1 * v)
+             for v in (1, 2, 3, 4, 5)]
+            + [(1, "A", 0, float(v), 0.2 * v) for v in (0, 3, 6)]
+            + [(1, "A", 1, float(v), 0.3 * v) for v in (1, 2, 3)]
+            + [(2, "A", 0, float(v), 0.4 * v) for v in (1, 2, 3)])
+    pixels = spark.createDataFrame(rows, tmetrics.PIXELS_SCHEMA)
+    got = tmetrics.evaluate_metrics(pixels, approx=False).toPandas()
+    assert set(zip(got["group_id"], got["method"], got["band"])) == {
+        (1, tmetrics.ORIG_KEY, 0), (1, "A", 0)}
+    assert len(got) == 14
+    a = got[(got["method"] == "A")].set_index("metric_id")["value"]
+    assert a["outliers_threshold"] == 2.0          # 0 < 1 and 6 > 5
+    assert a["relative_median_difference"] == 3.0
+
+
+def test_pixel_frames_bounded_and_in_order():
+    """A 200-tile batch comes out as frames of at most FRAME_TILES tiles
+    of pixels, which together are the batch's finite pixels tile by tile."""
+    from terraspark.config import TILE
+    n = TILE * TILE
+    rng = np.random.default_rng(11)
+    px = rng.normal(100.0, 20.0, (200, n)).astype("<f4")
+    px[rng.random(px.shape) < 0.05] = np.nan
+    lum = rng.random((200, n)).astype("<f4")
+    batch = pd.DataFrame({
+        "group_id": np.arange(200) % 3, "method": ["m%d" % (i % 4)
+                                                   for i in range(200)],
+        "band": np.arange(200) % 4,
+        "px": [r.tobytes() for r in px], "lum_px": [r.tobytes() for r in lum]})
+    frames = list(tmetrics.pixel_frames(
+        iter([batch]), TILE, "method",
+        (("value", "px", None), ("lum", "lum_px", None))))
+    assert len(frames) == -(-200 // tmetrics.FRAME_TILES)
+    assert all(len(f) <= tmetrics.FRAME_TILES * n for f in frames)
+
+    want = {"group_id": [], "method": [], "band": [], "value": [], "lum": []}
+    for i in range(200):
+        keep = np.isfinite(px[i])
+        want["group_id"] += [batch["group_id"][i]] * int(keep.sum())
+        want["method"] += [batch["method"][i]] * int(keep.sum())
+        want["band"] += [batch["band"][i]] * int(keep.sum())
+        want["value"] += px[i][keep].astype(np.float64).tolist()
+        want["lum"] += lum[i][keep].astype(np.float64).tolist()
+    got = pd.concat(frames, ignore_index=True)
+    pd.testing.assert_frame_equal(got, pd.DataFrame(want), check_exact=True,
+                                  check_dtype=False)
 
 
 def test_metrics_match_oracle(metric_frames):

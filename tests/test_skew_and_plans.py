@@ -1,5 +1,7 @@
 """Skew handling (FIXTURES.md hot cell x100) + physical-plan regression
 guards (broadcasts present, filters pushed, no stray shuffles)."""
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -143,6 +145,9 @@ def test_joined_repartition_only_when_scan_narrow(spark, fixture_tables):
     from terraspark.pipeline import TopoEngine
 
     images, scenes, dem, aoi, grids, oracle = fixture_tables
+    assert spark.sparkContext.defaultParallelism >= 2, (
+        "a one-core session never takes the narrow-scan repartition: "
+        "this test needs at least 2 cores")
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # WIDE input: as many partitions as the shuffle target -> no
@@ -166,6 +171,39 @@ def test_joined_repartition_only_when_scan_narrow(spark, fixture_tables):
     assert "hashpartitioning(image_id" in plan_n
     for eng in (eng_w, eng_n):
         eng.unpersist()
+
+
+def test_explode_spreads_one_partition_over_the_cores(spark):
+    """An AOI join keeps its input's layout, so an evaluation frame can
+    reach explode_pixels in one partition; the fan-out must still run on
+    every core (explicit partition count: AQE leaves it alone)."""
+    import pandas as pd
+    from terraspark import metrics as tmetrics
+    from terraspark.config import TILE
+
+    tiles = 16
+    rng = np.random.default_rng(4)
+    blob = [rng.random(TILE * TILE).astype("<f4").tobytes()
+            for _ in range(tiles)]
+    frame = spark.createDataFrame(pd.DataFrame({
+        "image_id": [f"img_{i % 2}" for i in range(tiles)],
+        "band": [i % 4 for i in range(tiles)],
+        "tile_x": list(range(tiles)), "tile_y": [0] * tiles,
+        "method": [tmetrics.ORIG_KEY] * tiles, "group_id": [1] * tiles,
+        "px": blob, "lum_px": blob,
+    }), "image_id string, band int, tile_x int, tile_y int, method string, "
+        "group_id int, px binary, lum_px binary").coalesce(1)
+    cores = spark.sparkContext.defaultParallelism
+
+    pixels = tmetrics.explode_pixels(frame)
+    plan = re.sub(r"#\d+", "",
+                  pixels._jdf.queryExecution().executedPlan().toString())
+    assert f"hashpartitioning(image_id, band, tile_x, tile_y, method, " \
+        f"{cores})" in plan
+    per_part = pixels.groupBy(F.spark_partition_id().alias("p")).count() \
+        .toPandas()
+    assert per_part["count"].sum() == tiles * TILE * TILE
+    assert len(per_part) >= min(cores, tiles), per_part
 
 
 def test_new_rel_ops_plan_shapes(spark):
